@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
 /** Optimization-round measurement harness (guide §1.4): times individual
   * bench queries through the same noop sink as [[Bench]] — NOT part of
   * the frozen driver contract — and dumps `.explain("formatted")` plans
-  * for the plans/r07 evidence files.
+  * for the `plans/` evidence files.
   *
   * Usage:
   *   runMain graft.BenchExtra time <reps> [q1,q2,...]
@@ -16,6 +16,23 @@ import org.apache.spark.sql.SparkSession
   * Environment mirrors Bench: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS.
   */
 object BenchExtra {
+
+  /** A plan dump without the ids that differ between runs — expression,
+    * plan and RDD ids, observation uuids, the codegen-stage and query-
+    * stage numbers AQE hands out in completion order, and the
+    * per-process scratch directory — so the dumps of two builds compare
+    * with a plain `diff -r`.
+    */
+  def stripRunIds(plan: String): String = plan
+    .replaceAll("#\\d+", "#")
+    .replaceAll("\\[plan_id=\\d+\\]", "[plan_id]")
+    .replaceAll("RDD\\[\\d+\\]", "RDD[]")
+    .replaceAll("[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "<uuid>")
+    .replaceAll("\\[codegen id : \\d+\\]", "[codegen id]")
+    .replaceAll("(QueryStage\\n(Output[^\\n]*\\n)?Arguments: )\\d+", "$1#")
+    .replace(Paths.get(graft.operators.Dedup.sigTablePath(""))
+      .toAbsolutePath.getParent.toString + "/", "<scratch>/")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -78,48 +95,6 @@ object BenchExtra {
             Dedup.minhashCandidatesOf(corpusDf)))
           println(f"[benchextra] minhash sig=$t0%.2f bands=$t1%.2f " +
             f"candjoin=$t2%.2f full=$t3%.2f")
-        }
-      case "pairing" =>
-        // A/B the candidate-pair generation (VERDICT r6 next-round 3):
-        // A = band-key self-join (reads the band exchange twice),
-        // B = repartition(bh) + within-group pairing (reads it once; the
-        //     collect happens AFTER the scalar-only exchange, so no
-        //     array ever crosses a shuffle). Equality asserted per rep.
-        import org.apache.spark.sql.functions._
-        import graft.operators.{Candidates, Dedup}
-        // SPARK_GRAFT_MINHASH_REPLICAS>0 switches to the replicated
-        // disjoint-shingle corpus (the Job C shape, where the band
-        // exchange is GBs and the double read actually costs)
-        val mReplicas =
-          sys.env.getOrElse("SPARK_GRAFT_MINHASH_REPLICAS", "0").toInt
-        val corpusDf =
-          if (mReplicas > 0) spark.read.parquet(
-            BenchData.ensureTextCorpus(spark, sfDir, mReplicas))
-          else graft.data.Interleaved.spread(
-            Dedup.corpus(spark, sfDir), Tables.documents(spark, sfDir))
-        def bands = Dedup.bandKeysOf(corpusDf)
-        def selfJoin = bands.as("a")
-          .join(bands.as("b").hint("shuffle_hash"),
-            col("a.bh") === col("b.bh") &&
-            col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-          .distinct()
-        def grouped = bands
-          .repartition(col("bh"))
-          .groupBy(col("bh"))
-          .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-          .filter(size(col("ids")) > 1)
-          .select(explode(graft.functions.TextHash.orderedPairs(
-            col("ids"))).as("p"))
-          .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
-          .distinct()
-        val nA = selfJoin.count(); val nB = grouped.count()
-        println(s"[benchextra] pairing rows: selfjoin=$nA grouped=$nB")
-        (1 to args(1).toInt).foreach { _ =>
-          Candidates.releaseAll(blocking = true)
-          val tA = Bench.time(Bench.exec(selfJoin))
-          val tB = Bench.time(Bench.exec(grouped))
-          println(f"[benchextra] pairing selfjoin=$tA%.2f grouped=$tB%.2f")
         }
       case "incr2" =>
         // apportion d_incr_dedup2's cost across its loop steps
@@ -229,7 +204,8 @@ object BenchExtra {
             val df = fn(spark, sfDir)
             val p = df.queryExecution.explainString(
               org.apache.spark.sql.execution.FormattedMode)
-            Files.writeString(Paths.get(s"$outDir/$name.txt"), p)
+            Files.writeString(Paths.get(s"$outDir/$name.txt"),
+              stripRunIds(p))
             println(s"[benchextra] plan $name -> $outDir/$name.txt")
           } catch { case e: Throwable =>
             System.err.println(s"[benchextra] $name failed: ${e.getMessage}")

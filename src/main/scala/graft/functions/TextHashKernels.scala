@@ -35,63 +35,6 @@ object TextHash {
 
   def shingles(w: Column, n: Int): Column =
     GraftBridge.column(Shingles(GraftBridge.expression(w), n))
-
-  def orderedPairs(ids: Column): Column =
-    GraftBridge.column(OrderedPairs(GraftBridge.expression(ids)))
-}
-
-/** All ordered pairs (i < j positionally) of a long array in one pass —
-  * the within-bucket pairing of the grouped candidate generation. The
-  * caller sorts the array ascending, so positional order IS value order
-  * and every emitted pair satisfies id_a < id_b (duplicates inside one
-  * bucket cannot occur: band keys are exploded from one row per doc).
-  * Equivalent HOF: flatten(transform(ids, (x,i) -> transform(
-  * slice(ids, i+2, size-i-1), y -> struct(x, y)))).
-  */
-final class OrderedPairsKernel extends Serializable {
-  def pairs(ids: ArrayData): ArrayData = {
-    val n = ids.numElements()
-    val out = new Array[Any](n * (n - 1) / 2)
-    var k = 0
-    var i = 0
-    while (i < n) {
-      val a = ids.getLong(i)
-      var j = i + 1
-      while (j < n) {
-        out(k) = org.apache.spark.sql.catalyst.InternalRow(
-          a, ids.getLong(j))
-        k += 1
-        j += 1
-      }
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-}
-
-case class OrderedPairs(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("id_a", LongType, nullable = false),
-    StructField("id_b", LongType, nullable = false))),
-    containsNull = false)
-
-  @transient private lazy val kernel = new OrderedPairsKernel
-
-  override def nullSafeEval(v: Any): Any =
-    kernel.pairs(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode = {
-    val h = ctx.addReferenceObj("orderedPairsKernel", kernel,
-      classOf[OrderedPairsKernel].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $h.pairs($a);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : OrderedPairs = copy(child = newChild)
-
-  override def prettyName: String = "ordered_pairs"
 }
 
 /** One-pass shingle builder shared by eval and generated code. */

@@ -2,8 +2,10 @@ package graft.operators
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.broadcast
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Observation}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 import org.apache.spark.storage.StorageLevel
 
 /** Size-gating for DATA-DEPENDENT candidate frames (the LSH/IVF
@@ -24,6 +26,10 @@ import org.apache.spark.storage.StorageLevel
   * id, so above the gate only the pair rows move; plain parquet in this
   * sandbox cannot express that, and the fallback shuffle is the honest
   * local equivalent.)
+  *
+  * Every dedup and k-NN path scores its candidates through
+  * [[scorePairs]] or [[topK]], so each broadcast-or-shuffle choice is
+  * made here and nowhere else.
   */
 object Candidates {
 
@@ -71,7 +77,7 @@ object Candidates {
     * execution (the caller must guarantee exactly one consumer acts
     * before any gate decision needs the count).
     */
-  def stage(cand: DataFrame): DataFrame = {
+  private def stage(cand: DataFrame): DataFrame = {
     val cached = cand.persist(StorageLevel.MEMORY_AND_DISK)
     synchronized { live += cached }
     cached
@@ -81,7 +87,8 @@ object Candidates {
     * joins un-hinted (candidate-bounded shuffle join, AQE free to make
     * its own runtime call).
     */
-  def hintIfSmall(df: DataFrame, rows: Long, maxRows: Long): DataFrame =
+  private def hintIfSmall(df: DataFrame, rows: Long, maxRows: Long)
+      : DataFrame =
     if (rows <= gateOverride.getOrElse(maxRows)) broadcast(df) else df
 
   /** Read a [[stage]]d frame's observed gate count WITHOUT risking an
@@ -94,7 +101,7 @@ object Candidates {
     * it, so a violated ordering degrades to one extra pass and a loud
     * warning instead of a hang.
     */
-  def observedCount(obs: org.apache.spark.sql.Observation,
+  private def observedCount(obs: Observation,
       staged: DataFrame, timeoutMs: Long = 30000L): Long = {
     val deadline = System.nanoTime() + timeoutMs * 1000000L
     def poll() = // waits up to ~100 ms per call
@@ -109,6 +116,130 @@ object Candidates {
           "(an upstream consumer-ordering contract was violated)")
         staged.count()
     }
+  }
+
+  /** How [[scorePairs]] reads and scores a corpus of `(id, payload)`
+    * rows: `derive` turns the payload column into the score input once
+    * the rows are pruned to candidates (shingling a text; identity for
+    * an embedding), the inputs are named `a`/`b` on the two sides of a
+    * pair, and `score(a, b)` is emitted as `as`.
+    */
+  final case class Scoring(id: String, payload: String,
+      derive: Column => Column, a: String, b: String,
+      score: (Column, Column) => Column, as: String)
+
+  /** Where [[scorePairs]] gets its candidate pairs. */
+  sealed trait Pairs
+
+  /** Deduplicated `(id_a, id_b)` pairs whose ids both index the corpus. */
+  final case class Given(pairs: DataFrame) extends Pairs
+
+  /** Pairs from a stored key index `(id, on…)`: the batch's probe keys
+    * `(new_id, on…)`, exactly `fanout` per `batch` row, meet the index.
+    * `id_a` then indexes the corpus and `id_b` the `batch`, whose
+    * `(id, payload)` rows are the b side; the number of corpus rows
+    * re-read is observed as `reread`.
+    */
+  final case class Probe(index: DataFrame, keys: DataFrame, fanout: Int,
+      on: Seq[String], batch: DataFrame, reread: String) extends Pairs
+
+  /** Score candidate pairs against a corpus — the one skeleton of every
+    * dedup path:
+    *  1. a [[Probe]] joins its keys to the index (the key side broadcast
+    *     under the gate, its size known by arithmetic from a count-only
+    *     scan of the batch);
+    *  2. the pairs are [[stage]]d, their count observed on the first
+    *     action below instead of in a pass of its own;
+    *  3. the corpus is semi-join pruned to candidate ids (both ids of
+    *     [[Given]] pairs, `id_a` of probed ones) before any payload is
+    *     derived or moved — Catalyst pushes no semi-join below a
+    *     Project, so the order written here is the order that runs. An
+    *     ARRAY payload prunes through materialized,
+    *     gate-hinted ids: un-hinted, the static plan sort-merges and the
+    *     arrays enter an exchange. A scalar payload (text, derived after
+    *     the prune) prunes un-hinted: AQE sizes the build from the staged
+    *     pairs, and its shuffle fallback moves strings, never arrays;
+    *  4. the derived sides are materialized and re-attached through
+    *     gate-hinted joins — under the gates nothing array-valued enters
+    *     an exchange, above them every join degrades to a
+    *     candidate-bounded shuffle. The materialization's count is the
+    *     one action that runs the staged pairs (delivering their count),
+    *     and without it every broadcast build under AQE re-ran the
+    *     prune and derive subtree (11 duplicate corpus-scan stages,
+    *     8 s instead of 2.5 s for MinHash at sf0.1);
+    *  5. pairs scoring at least `threshold` are kept, ordered by pair.
+    * Returns `(id_a, id_b, <as>)` and the re-read observation (filled
+    * for a [[Probe]] only).
+    */
+  def scorePairs(pairs: Pairs, corpus: DataFrame, sc: Scoring,
+      threshold: Double): (DataFrame, Observation) = {
+    import sc._
+    val (raw, batchSide) = pairs match {
+      case Given(p) => (p, None)
+      case Probe(index, keys, fanout, on, batch, _) =>
+        val nBatch = GraftBridge.stripTopRepartition(batch).count()
+        (index.join(hintIfSmall(keys, nBatch * fanout, IdPairRowGate), on)
+          .select(col(id).as("id_a"), col("new_id").as("id_b"))
+          .distinct(),
+         Some(hintIfSmall(batch.select(col(id).as("id_b"),
+           derive(col(payload)).as(b)), nBatch, ArrayPayloadRowGate)))
+    }
+    val pairObs = Observation()
+    val cand = stage(raw.observe(pairObs, count(lit(1)).as("n")))
+    val ids = (if (batchSide.isEmpty)
+        cand.select(explode(array(col("id_a"), col("id_b"))).as(id))
+      else cand.select(col("id_a").as(id))).distinct()
+    val semi = if (corpus.schema(payload).dataType.isInstanceOf[ArrayType]) {
+      val (m, n) = materialize(ids)
+      corpus.join(hintIfSmall(m, n, IdPairRowGate), Seq(id), "left_semi")
+    } else corpus.join(ids, Seq(id), "left_semi")
+    val rereadObs = Observation()
+    val pruned = pairs match {
+      case p: Probe => semi.observe(rereadObs, count(lit(1)).as(p.reread))
+      case _ => semi
+    }
+    val (sideA, sideB) = batchSide match {
+      case Some(sideB) =>
+        val (m, n) = materialize(pruned.select(col(id).as("id_a"),
+          derive(col(payload)).as(a)))
+        (hintIfSmall(m, n, ArrayPayloadRowGate), sideB)
+      case None =>
+        val (m, n) = materialize(pruned.select(col(id),
+          derive(col(payload))))
+        val both = hintIfSmall(m, n, ArrayPayloadRowGate)
+        val derived = m.columns(1)
+        (both.select(col(id).as("id_a"), col(derived).as(a)),
+         both.select(col(id).as("id_b"), col(derived).as(b)))
+    }
+    val out = hintIfSmall(cand, observedCount(pairObs, cand), IdPairRowGate)
+      .join(sideA, Seq("id_a"))
+      .join(sideB, Seq("id_b"))
+      .select(col("id_a"), col("id_b"), score(col(a), col(b)).as(as))
+      .filter(col(as) >= threshold)
+      .orderBy(col("id_a"), col("id_b"))
+    (out, rereadObs)
+  }
+
+  /** Top-`k` re-rank of data-dependent `(qid, id)` candidate pairs: each
+    * query's `k` best corpus rows by `score` (as `sim`, ties on the id),
+    * ranked `rank`. `queries` is a small static frame keyed by `qid`,
+    * broadcast unconditionally; the gated candidates carry its payload
+    * to the `(id, payload)` corpus, which is semi-join pruned to
+    * candidate ids before its payload moves.
+    */
+  def topK(cand: DataFrame, queries: DataFrame, corpus: DataFrame,
+      score: Column, k: Int): DataFrame = {
+    val Array(qid, id) = cand.columns
+    val (c, n) = materialize(cand)
+    val scored = hintIfSmall(c.join(broadcast(queries), Seq(qid)), n,
+        ArrayPayloadRowGate)
+      .join(corpus.join(hintIfSmall(c.select(col(id)), n, IdPairRowGate),
+        Seq(id), "left_semi"), Seq(id))
+      .select(col(qid), col(id), score.as("sim"))
+    val w = Window.partitionBy(col(qid)).orderBy(col("sim").desc, col(id))
+    scored.withColumn("rank", row_number().over(w).cast("int"))
+      .filter(col("rank") <= k)
+      .orderBy(col(qid), col("rank"))
   }
 
   /** Unpersist every candidate frame cached since the last call.

@@ -41,6 +41,9 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     graft.functions.CosineSim.cosine(a, b)
 
+  /** [[cosine]] to 4 places — the similarity every query reports. */
+  def cosineSim(a: Column, b: Column): Column = round(cosine(a, b), 4)
+
   /** Query set: every 50th vector. */
   private def queries(s: SparkSession, dir: String): DataFrame =
     Tables.embeddings(s, dir).filter(col("vec_id") % 50 === 0)
@@ -56,7 +59,7 @@ object Similarity {
     val scored = corpus.crossJoin(broadcast(queries(s, dir)))
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"),
-        round(cosine(col("qe"), col("embedding")), 4).as("sim"))
+        cosineSim(col("qe"), col("embedding")).as("sim"))
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("sim").desc, col("vec_id"))
     scored.withColumn("rank", row_number().over(w))
@@ -151,7 +154,7 @@ object Similarity {
     val c = dupCorpus(s, dir)
     c.as("a").join(c.as("b"), col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
-        round(cosine(col("a.e"), col("b.e")), 4).as("sim"))
+        cosineSim(col("a.e"), col("b.e")).as("sim"))
       .filter(col("sim") >= threshold)
       .orderBy(col("id_a"), col("id_b"))
   }
@@ -209,61 +212,17 @@ object Similarity {
         col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
       .dropDuplicates("id_a", "id_b")
-    verifyCosinePairs(c, rawCand, threshold)
+    Candidates.scorePairs(Candidates.Given(rawCand), c, Embedded,
+      threshold)._1
   }
 
-  /** Exact-cosine verification of a candidate pair set against a
-    * `(vec_id, e)` corpus — the shared tail of [[cosineDupsLsh]] and
-    * [[semDedup]] (pure code motion from the former; the staged/gated
-    * plan is unchanged).
-    *
-    * The re-attach is SIZE-GATED, never hint-forced: the pair set is
-    * STAGED (cached) with its count riding the pruned-embedding
-    * materialization below as an observe() metric — no dedicated count
-    * pass (VERDICT r4 wrongness #3) — and broadcasts only under the
-    * gate; an unconditional hint would force a broadcast of a
-    * data-dependent set that scales with the corpus duplicate rate
-    * (VERDICT r3 wrongness #2). Above the gate the joins degrade to
-    * candidate-bounded shuffles (production would bucket the embedding
-    * table by vec_id so only pair rows move).
+  /** `(vec_id, e)` rows as the verify scores them: the embedding
+    * itself, exact cosine of the pair. The shared scoring of
+    * [[cosineDupsLsh]], [[semDedup]] and [[incrementalCosineDups]]; the
+    * gating is [[Candidates.scorePairs]]'s.
     */
-  private def verifyCosinePairs(c: DataFrame, rawCand: DataFrame,
-      threshold: Double): DataFrame = {
-    val obs = org.apache.spark.sql.Observation()
-    val cand = Candidates.stage(
-      rawCand.observe(obs, count(lit(1)).as("n")))
-    // semi-join-prune the embedding side to candidate ids BEFORE the
-    // re-attach (mirrors minhashCandidatesOf's candIds prune): above
-    // the gate the attach joins otherwise shuffle the FULL corpus
-    // embedding arrays (ADVICE r4). The ids frame is MATERIALIZED —
-    // its (ids-only, cheap) count action is the single execution that
-    // populates the cand cache and delivers the observed pair count —
-    // so the semi build can be gate-hinted: un-hinted, the static plan
-    // sort-merges and the corpus EMBEDDING side enters an exchange,
-    // exactly what the prune exists to prevent. (The text-level minhash
-    // semi can stay un-hinted — its shuffle fallback moves strings.)
-    val (candIds, nIds) = Candidates.materialize(cand
-      .select(explode(array(col("id_a"), col("id_b"))).as("vec_id"))
-      .distinct())
-    val nCand = Candidates.observedCount(obs, cand)
-    val (cPruned, nPruned) = Candidates.materialize(
-      c.join(Candidates.hintIfSmall(candIds, nIds,
-        Candidates.IdPairRowGate), Seq("vec_id"), "left_semi"))
-    val cB = Candidates.hintIfSmall(cPruned, nPruned,
-      Candidates.ArrayPayloadRowGate)
-    val withA = Candidates
-      .hintIfSmall(cand, nCand, Candidates.IdPairRowGate)
-      .join(cB.select(col("vec_id").as("id_a"), col("e").as("ea")),
-        Seq("id_a"))
-    Candidates.hintIfSmall(withA, nCand,
-        Candidates.ArrayPayloadRowGate)
-      .join(cB.select(col("vec_id").as("id_b"), col("e").as("eb")),
-        Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(cosine(col("ea"), col("eb")), 4).as("sim"))
-      .filter(col("sim") >= threshold)
-      .orderBy(col("id_a"), col("id_b"))
-  }
+  private val Embedded = Candidates.Scoring("vec_id", "e", identity,
+    "ea", "eb", cosineSim, "sim")
 
   /** SemDeDup (Abbas et al. 2023): semantic dedup WITHIN coarse
     * clusters — each vector is assigned to cells of the Lloyd-refined
@@ -321,7 +280,8 @@ object Similarity {
       .join(assigned.as("b"), col("a.cell") === col("b.cell") &&
         col("a.vec_id") < col("b.vec_id") && col("a.cell") === minShared)
       .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
-    verifyCosinePairs(c, rawCand, threshold)
+    Candidates.scorePairs(Candidates.Given(rawCand), c, Embedded,
+      threshold)._1
   }
 
   /** Fixture split for the incremental embedding path (mirrors
@@ -371,50 +331,15 @@ object Similarity {
   def incrementalCosineDups(s: SparkSession, batch: DataFrame,
       corpusEmb: DataFrame, sigPath: String, threshold: Double = 0.9)
       : (DataFrame, org.apache.spark.sql.Observation) = {
-    val stored = s.read.parquet(sigPath)
-    val keyedB = batch.select(col("vec_id"),
-      posexplode(dupSignatures(col("e"))).as(Seq("tbl", "sig")))
     val probeMasks = 0 +: (0 until DupBits).map(1 << _)
-    // gate count by arithmetic (see incrementalDedupFrom): the probe
-    // fan-out is EXACTLY DupTables × (DupBits+1) keys per vector, so a
-    // count-only scan of the batch replaces signing + caching the
-    // single-consumer probe-key frame
-    val nBb = org.apache.spark.sql.GraftBridge.stripTopRepartition(batch)
-      .count() * DupTables * (DupBits + 1)
-    val bb = keyedB.select(col("vec_id").as("new_id"), col("tbl"),
-      explode(array(probeMasks.map(m =>
-        col("sig").bitwiseXOR(lit(m))): _*)).as("sig"))
-    val rawCand = stored
-      .join(Candidates.hintIfSmall(bb, nBb, Candidates.IdPairRowGate),
-        Seq("tbl", "sig"))
-      .select(col("vec_id").as("id_a"), col("new_id").as("id_b"))
-      .distinct()
-    // staged; the pair count rides the ids-only materialization below
-    val candObs = org.apache.spark.sql.Observation()
-    val cand = Candidates.stage(
-      rawCand.observe(candObs, count(lit(1)).as("n")))
-    val (oldIds, nOld) = Candidates.materialize(
-      cand.select(col("id_a").as("vec_id")).distinct())
-    val nCand = Candidates.observedCount(candObs, cand)
-    val obs = org.apache.spark.sql.Observation()
-    val (oldE, nOldE) = Candidates.materialize(corpusEmb
-      .join(Candidates.hintIfSmall(oldIds, nOld,
-        Candidates.IdPairRowGate), Seq("vec_id"), "left_semi")
-      .observe(obs, count(lit(1)).as("n_reread"))
-      .select(col("vec_id").as("id_a"), col("e").as("ea")))
-    // batch embeddings: batch-bounded by definition, still gated
-    val newE = Candidates.hintIfSmall(
-      batch.select(col("vec_id").as("id_b"), col("e").as("eb")),
-      nBb / (DupTables * (DupBits + 1)), Candidates.ArrayPayloadRowGate)
-    val out = Candidates.hintIfSmall(cand, nCand, Candidates.IdPairRowGate)
-      .join(Candidates.hintIfSmall(oldE, nOldE,
-        Candidates.ArrayPayloadRowGate), Seq("id_a"))
-      .join(newE, Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(cosine(col("ea"), col("eb")), 4).as("sim"))
-      .filter(col("sim") >= threshold)
-      .orderBy(col("id_a"), col("id_b"))
-    (out, obs)
+    val keys = batch.select(col("vec_id"),
+        posexplode(dupSignatures(col("e"))).as(Seq("tbl", "sig")))
+      .select(col("vec_id").as("new_id"), col("tbl"),
+        explode(array(probeMasks.map(m =>
+          col("sig").bitwiseXOR(lit(m))): _*)).as("sig"))
+    Candidates.scorePairs(Candidates.Probe(s.read.parquet(sigPath), keys,
+        DupTables * (DupBits + 1), Seq("tbl", "sig"), batch, "n_reread"),
+      corpusEmb, Embedded, threshold)
   }
 
   /** The oracle-gated `e_incr_dups` entry: sign the existing corpus once
@@ -557,28 +482,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"))
       .dropDuplicates("qid", "vec_id")
-    // size-gated candidate broadcast (see cosineDupsLsh): the query set
-    // is small and static (broadcast stays unconditional), but the
-    // candidate set is data-dependent — gate it
-    val (cand, nCand) = Candidates.materialize(rawCand)
-    val withQe = cand.join(broadcast(queries(s, dir)), Seq("qid"))
-    // embedding side pruned to candidate vec_ids before the attach —
-    // above the gate the full corpus arrays otherwise shuffle (ADVICE r4)
-    val candVecIds = cand.select(col("vec_id"))
-    val corpusE = Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("embedding"))
-      .join(Candidates.hintIfSmall(candVecIds, nCand,
-        Candidates.IdPairRowGate), Seq("vec_id"), "left_semi")
-    val scored = Candidates.hintIfSmall(withQe, nCand,
-        Candidates.ArrayPayloadRowGate)
-      .join(corpusE, Seq("vec_id"))
-      .select(col("qid"), col("vec_id"),
-        round(cosine(col("qe"), col("embedding")), 4).as("sim"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= k)
-      .orderBy(col("qid"), col("rank"))
+    rerank(s, dir, rawCand, k)
   }
 
   /** ANN via multi-table, multi-probe sign-LSH: corpus emits one (table,
@@ -604,31 +508,20 @@ object Similarity {
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"))
       .dropDuplicates("qid", "vec_id")
-    // re-attach embeddings to the deduped candidate ids: query side from
-    // the tiny STATIC broadcast query set; the data-dependent candidate
-    // frame is size-gated (see cosineDupsLsh) — under the gate the
-    // corpus embeddings never shuffle, above it the join degrades to a
-    // candidate-bounded shuffle
-    val (cand, nCand) = Candidates.materialize(rawCand)
-    val withQe = cand.join(broadcast(queries(s, dir)), Seq("qid"))
-    // embedding side pruned to candidate vec_ids before the attach —
-    // above the gate the full corpus arrays otherwise shuffle (ADVICE r4)
-    val candVecIds = cand.select(col("vec_id"))
-    val corpusE = Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("embedding"))
-      .join(Candidates.hintIfSmall(candVecIds, nCand,
-        Candidates.IdPairRowGate), Seq("vec_id"), "left_semi")
-    val scored = Candidates.hintIfSmall(withQe, nCand,
-        Candidates.ArrayPayloadRowGate)
-      .join(corpusE, Seq("vec_id"))
-      .select(col("qid"), col("vec_id"),
-        round(cosine(col("qe"), col("embedding")), 4).as("sim"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= k)
-      .orderBy(col("qid"), col("rank"))
+    rerank(s, dir, rawCand, k)
   }
+
+  /** The exact-cosine top-`k` re-rank shared by [[knnIvf]] and
+    * [[knnLsh]]: the static query set broadcasts, the data-dependent
+    * `(qid, vec_id)` candidates are size-gated and the corpus embeddings
+    * are pruned to candidate ids before they move
+    * ([[Candidates.topK]]).
+    */
+  private def rerank(s: SparkSession, dir: String, rawCand: DataFrame,
+      k: Int): DataFrame =
+    Candidates.topK(rawCand, queries(s, dir),
+      Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")),
+      cosineSim(col("qe"), col("embedding")), k)
 
   /** Per-label embedding centroids (mean pooling) — the class-prototype
     * aggregation behind SemDeDup-style semantic clustering and

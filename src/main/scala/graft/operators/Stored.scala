@@ -31,7 +31,4 @@ object Stored {
       lazy val once: Unit = write
       () => once
     })()
-
-  /** Test hook: forget a path so a spec can force a rewrite. */
-  def reset(path: String): Unit = done.remove(path)
 }

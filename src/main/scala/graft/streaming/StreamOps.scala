@@ -235,11 +235,9 @@ object StreamOps {
       .select(col("id_a"), col("id_b"),
         Dedup.shinglesOf(split(col("t_a"), " ")).as("sh_a"),
         Dedup.shinglesOf(split(col("t_b"), " ")).as("sh_b"))
-      .withColumn("jaccard", round(
-        size(array_intersect(col("sh_a"), col("sh_b"))) /
-          size(array_union(col("sh_a"), col("sh_b"))), 4))
+      .select(col("id_a"), col("id_b"),
+        Dedup.jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
   /** Streaming incremental near-dup dedup against a PERSISTED corpus
@@ -320,7 +318,7 @@ object StreamOps {
       .join(corpusEmb.select(col("vec_id").as("id_a"),
         col("e").as("ea")), Seq("id_a"))
       .select(col("id_a"), col("id_b"),
-        round(Similarity.cosine(col("ea"), col("eb")), 4).as("sim"))
+        Similarity.cosineSim(col("ea"), col("eb")).as("sim"))
       .filter(col("sim") >= threshold)
   }
 

@@ -194,23 +194,6 @@ class FunctionsSpec extends SparkSpec {
     assert(sv === 0)
   }
 
-  test("OrderedPairs kernel ≡ HOF pair expansion, incl. empty/singleton") {
-    // the grouped-pairing probe's kernel (BenchExtra "pairing"): all
-    // positional pairs i<j of a long array, one pass
-    val df = Seq(
-      Seq.empty[Long], Seq(7L), Seq(3L, 9L), Seq(1L, 2L, 5L, 8L))
-      .toDF("ids")
-    val bad = df.select(
-      graft.functions.TextHash.orderedPairs(col("ids")).as("fast"),
-      flatten(transform(col("ids"), (x, i) =>
-        transform(slice(col("ids"), i + lit(2),
-          greatest(size(col("ids")) - i - 1, lit(0))),
-          y => struct(x.as("id_a"), y.as("id_b"))))).as("spec"))
-      .filter(col("fast").cast("string") =!= col("spec").cast("string"))
-      .count()
-    assert(bad === 0)
-  }
-
   test("codegen token-count kernels ≡ regex forms on real docs and " +
       "adversarial strings") {
     import graft.operators.TextOps
