@@ -10,7 +10,7 @@
 #   REPS=2 LEVELS="400 800 1600" scripts/scaling-jobc-sweep.sh
 #
 # Pre-generate the corpora first (unpinned, 32 cores):
-#   sbt -batch "runMain graft.PrepScale text400 text800 text1600"
+#   sbt -batch "runMain graft.BenchData text400 text800 text1600"
 set -euo pipefail
 cd "$(dirname "$0")/.."
 

@@ -20,6 +20,32 @@ import graft.data.Interleaved
   *    on a real cluster.
   */
 object BenchData {
+  /** Pre-generates the scaled tables for one or more replica levels, so
+    * the pinned scaling runs don't pay generation inside an 8-core JVM.
+    * Args: plain ints → bucketed doc tables (Jobs A/B, default `8000`);
+    * `textN` → the replicated disjoint-shingle text corpus at N replicas
+    * (Job C). Reads SPARK_GRAFT_SF_DIR like [[Bench]].
+    *
+    *   runMain graft.BenchData 8000 text400
+    */
+  def main(args: Array[String]): Unit = {
+    val spark = SparkSession.builder().master("local[32]")
+      .config("spark.sql.shuffle.partitions", "32")
+      .config("spark.ui.enabled", "false").getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val specs = if (args.isEmpty) Seq("8000") else args.toSeq
+    specs.foreach {
+      case t if t.startsWith("text") =>
+        val p = ensureTextCorpus(spark, sfDir, t.drop(4).toInt)
+        println(s"[prep] text corpus $p ${spark.read.parquet(p).count()} docs")
+      case n =>
+        val (d, r) = ensureBucketed(spark, sfDir, n.toInt)
+        println(s"[prep] $d ${spark.table(d).count()} docs; $r ready")
+    }
+    spark.stop()
+  }
+
   /** 128 buckets: at local[32] each level gets >=4 task waves, so one
     * slow bucket cannot set the wall time (straggler smoothing); still a
     * single wave of fine tasks on a 128-executor cluster.

@@ -33,7 +33,8 @@ object Interleaved {
     * unconditional repartition would be a full shuffle of the document
     * text for nothing; there this is a no-op. (CSE of the split() behind
     * the aliased projection does NOT need the exchange — CollapseProject
-    * keeps multi-referenced non-cheap aliases staged; measured in Probe6.)
+    * keeps multi-referenced non-cheap aliases staged; measured by object
+    * Probe6 in `git show 25d1e79:src/main/scala/graft/Probes.scala`.)
     */
   def spread(df: DataFrame, source: DataFrame): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism

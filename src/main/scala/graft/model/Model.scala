@@ -34,21 +34,3 @@ final case class DocVerdict(
     doc_id: String,
     valid: Boolean,
     violations: Seq[Violation])
-
-/** Per-partition conjunction verdict (FilesOutput.java:47-50 `allMatch`). */
-final case class PartitionVerdict(
-    part: String,
-    valid: Boolean,
-    docs: Long,
-    invalidDocs: Long,
-    violations: Long)
-
-/** Per-column profile from the one-pass stats aggregator. */
-final case class ColumnStats(
-    column: String,
-    count: Long,
-    nulls: Long,
-    nullRate: Double,
-    min: String,
-    max: String,
-    approxDistinct: Long)

@@ -52,9 +52,6 @@ object Candidates {
   private def gateOverride: Option[Long] =
     sys.props.get("graft.candidates.gate").map(_.toLong)
 
-  /** Register an externally persisted frame for [[releaseAll]]. */
-  def register(df: DataFrame): Unit = synchronized { live += df }
-
   /** Cache + count a candidate frame (registered for [[releaseAll]]);
     * returns the cached frame and its exact row count — the only
     * trustworthy size signal for a post-join frame (optimizer stats on

@@ -76,8 +76,9 @@ object Dedup {
 
   /** Corpus with the words array staged in its own projection. The alias
     * is what guarantees split() runs once per row — CollapseProject keeps a
-    * multi-referenced non-cheap alias staged (Probe6), so no exchange is
-    * needed for CSE. The spread() only kicks in for tiny local parquet
+    * multi-referenced non-cheap alias staged (Probe6 in
+    * `git show 25d1e79:src/main/scala/graft/Probes.scala`), so no exchange
+    * is needed for CSE. The spread() only kicks in for tiny local parquet
     * (single split) to parallelize the downstream shingle projections; at
     * scale the scan has many splits and nothing is shuffled. The split runs
     * AFTER the spread so even that round-robin exchange moves the raw text
@@ -209,8 +210,8 @@ object Dedup {
       threshold: Double = 0.6): DataFrame = {
     // staged projections: `sig` is a multi-referenced alias inside
     // bandKeysOf, so CollapseProject keeps it evaluated once per row (no
-    // exchange or persist needed for CSE — Probe6). The identical
-    // band-exploded plan on both sides of the self-join shares ONE
+    // exchange or persist needed for CSE — Probe6, see [[corpus]]). The
+    // identical band-exploded plan on both sides of the self-join shares ONE
     // shuffle via ReusedExchange; the write-once form of this index is
     // [[writeSignatureTable]] + [[incrementalDedup]]. Shingle SETS are
     // only ever materialized for candidate docs, in the verify.

@@ -15,7 +15,8 @@ import graft.Tables
   * HOF filters consume it: HOF arguments get NO common-subexpression
   * elimination, so an inline `split(text)` would re-run once per
   * `filter()` call (BENCH.md note 2; CollapseProject keeps the
-  * multi-referenced alias staged — Probe6).
+  * multi-referenced alias staged — Probe6 in
+  * `git show 25d1e79:src/main/scala/graft/Probes.scala`).
   */
 object TextOps {
 
@@ -106,7 +107,8 @@ object TextOps {
   /** Language ID: per-language stopword hit counts STAGED ONCE as named
     * aliases, then the argmax computed from the staged columns in a
     * second projection (CollapseProject keeps multi-referenced non-cheap
-    * aliases staged — Probe6 — so each HOF filter runs exactly once per
+    * aliases staged — Probe6, see the object comment — so each HOF
+    * filter runs exactly once per
     * row; the r3 inline `langPredOf(w)` form re-ran each one up to 5x).
     */
   def langId(s: SparkSession, dir: String): DataFrame = {
@@ -577,9 +579,11 @@ object TextOps {
     * every chunk-granularity operator (boilerplate strip, chunk-overlap
     * near-dup, keep sweeps); a production pipeline chunks each ingestion
     * batch once and appends here, after which those operators are pure
-    * digest-table reads. ProbeR5b showed caching the chunk frame loses
-    * to recompute WITHIN one job — the winning form is this cross-job
-    * storage decision (BENCH.md round-5 note 14).
+    * digest-table reads. ProbeR5b (in
+    * `git show 25d1e79:src/main/scala/graft/Probes.scala`) showed
+    * caching the chunk frame loses to recompute WITHIN one job — the
+    * winning form is this cross-job storage decision (BENCH.md round-5
+    * note 14).
     */
   def writeChunkTable(docs: DataFrame, path: String): Unit =
     org.apache.spark.sql.GraftBridge.stripTopSort(contentChunksOf(docs))

@@ -35,12 +35,14 @@ import org.apache.spark.sql.functions._
   *  - `withViolations(df, variantExpr)`: STAGED evaluation — the JSON is
   *    parsed once, every referenced (path, mode) is extracted once, and
   *    all checks evaluate over the extracted columns. CollapseProject
-  *    keeps the multi-referenced non-cheap aliases staged (Probe6), so a
+  *    keeps the multi-referenced non-cheap aliases staged (pinned by
+  *    PlanSpec "schema-compiler plan: one parse ..."), so a
   *    schema with N keywords costs one parse + |extractions| per row
   *    instead of ~2N parses (VERDICT r1 wrongness #6). This is the
   *    production path.
   *
-  * Semantics note (verified on Spark 4.1, Probe8): a MISSING key yields
+  * Semantics note (Spark 4.1; pinned by JsonSchemaSpec "required:
+  * explicit JSON null counts as present"): a MISSING key yields
   * SQL NULL from try_variant_get, while an explicit JSON null yields a
   * non-null variant of type VOID — so `required` correctly treats an
   * explicit null as present (NetworkNT semantics), and checks fire only
@@ -237,9 +239,10 @@ object JsonSchemaCompiler {
       // stage 3: all checks over the extracted columns, in one plain
       // select. The staged aliases keep each extraction evaluated once
       // (CollapseProject does not re-inline multi-referenced non-cheap
-      // aliases — Probe6); very wide schemas could still push the fused
-      // codegen method past HotSpot's JIT limit (BENCH.md code-cache
-      // note) — if that surfaces, split stage 3 into chunked selects.
+      // aliases — PlanSpec "schema-compiler plan: one parse ..."); very
+      // wide schemas could still push the fused codegen method past
+      // HotSpot's JIT limit (BENCH.md code-cache note) — if that
+      // surfaces, split stage 3 into chunked selects.
       s2.select(keep.map(col) :+ violationsEnv(env).as(out): _*)
     }
   }

@@ -112,22 +112,6 @@ final case class TypeRule(field: String, expected: String) extends SpanRule {
       RuleCompiler.jsonTypeOf(span.getField(field)))
 }
 
-/** `format` — 2020-12 format assertion on a string field (the reference
-  * enables assertions globally: formatAssertionsEnabled(true),
-  * YamlSchemaValidator.java:193). Unknown formats compile to no-ops
-  * (annotations), per spec.
-  */
-final case class FormatRule(field: String, format: String) extends SpanRule {
-  val keyword = "format"
-  private val regex: Option[String] = Formats.regexes.get(format)
-  def violated(span: Column, i1: Column): Column = {
-    val v = span.getField(field)
-    regex.map(re => v.isNotNull && !v.rlike(re)).getOrElse(lit(false))
-  }
-  def message(span: Column, i1: Column): Column =
-    lit(s"does not match the $format pattern")
-}
-
 /** `not` — negation of an inner rule (sample-schema.json:1442-1444). */
 final case class NotRule(inner: SpanRule) extends SpanRule {
   val field: String = inner.field

@@ -445,4 +445,51 @@ class ValidateCliSpec extends SparkSpec {
     assert(summary.docs === 1 && !summary.allValid)
     assert(rows.head.errors.head._2.contains("cannot be resolved"))
   }
+
+  test("runFull evaluates its compiled schemas once: no report action " +
+      "parses JSON outside the cached validated frame") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val d = Files.createTempDirectory("graft-once")
+    Files.writeString(d.resolve("named.json"),
+      """{"type":"object","required":["name"],""" +
+        """"properties":{"name":{"type":"string"}}}""")
+    Files.writeString(d.resolve("counted.json"),
+      """{"type":"object","properties":{"n":{"type":"integer"}}}""")
+    Files.writeString(d.resolve("a.yaml"),
+      "$schema: ./named.json\nname: alice\n")
+    Files.writeString(d.resolve("b.yaml"), "$schema: ./counted.json\nn: x\n")
+    // AdaptiveSparkPlanHelper.collect descends through AQE wrappers and
+    // query stages but, like SparkPlan.collect, not into the plan behind
+    // an InMemoryTableScan: a parse found here ran in the action itself
+    val plans = new AdaptiveSparkPlanHelper {}
+    val parseJson = "parseJson|parse_json".r
+    val actions = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        actions.synchronized {
+          actions += plans.collect(qe.executedPlan) {
+            case p if p.expressions.exists(e =>
+              parseJson.findFirstIn(e.toString).isDefined) => p.nodeName
+          }
+        }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val (rows, summary) =
+      try {
+        val r = Validate.runFull(spark,
+          Seq("a.yaml", "b.yaml").map(f => d.resolve(f).toString),
+          schema = None, autoDetect = false)
+        org.apache.spark.ListenerDrain(spark.sparkContext)
+        r
+      } finally spark.listenerManager.unregister(listener)
+    assert(summary.docs === 2 && summary.invalidDocs === 1)
+    assert(rows.sortBy(_.doc_id).map(_.valid) === Seq(true, false))
+    // the report gather alone runs four actions
+    assert(actions.size >= 4, actions)
+    assert(actions.forall(_.isEmpty),
+      s"actions with their own parse_json nodes: $actions")
+  }
 }
