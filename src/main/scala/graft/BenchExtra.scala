@@ -23,13 +23,15 @@ object BenchExtra {
       |  runMain graft.BenchExtra plan <outDir> [q1,q2,...]""".stripMargin
 
   /** A plan dump without the ids that differ between runs — expression,
-    * plan and RDD ids, observation uuids, the codegen-stage and query-
-    * stage numbers AQE hands out in completion order, and the
-    * per-process scratch directory — so the dumps of two builds compare
-    * with a plain `diff -r`.
+    * plan and RDD ids, the lambda-variable counter (global to the JVM, so
+    * it depends on the queries dumped before), observation uuids, the
+    * codegen-stage and query-stage numbers AQE hands out in completion
+    * order, and the per-process scratch directory — so the dumps of two
+    * builds compare with a plain `diff -r`.
     */
   def stripRunIds(plan: String): String = plan
     .replaceAll("#\\d+", "#")
+    .replaceAll("(lambda \\w+)_\\d+#", "$1#")
     .replaceAll("\\[plan_id=\\d+\\]", "[plan_id]")
     .replaceAll("RDD\\[\\d+\\]", "RDD[]")
     .replaceAll("[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "<uuid>")

@@ -81,12 +81,12 @@ object SpanInvariant {
     annotate(docs, ref).select(col("doc_id"), col("part"), col("violations"))
 
   /** Per-doc verdicts: valid iff zero span mismatches. Counts via the
-    * codegen'd [[graft.functions.SpanMismatchCount]] kernel — the
-    * violation structs the detail path builds (through the interpreted
-    * transform over mismatch indices) exist here only to be size()d,
-    * so the count kernel is the same number without materializing any
-    * struct (FunctionsSpec pins indices ≡ HOF violations and the count
-    * is their length by construction).
+    * codegen'd [[graft.functions.SpanVerdictCount]] kernel with an empty
+    * rule set — the violation structs the detail path builds (through
+    * the interpreted transform over mismatch indices) exist here only to
+    * be size()d, so the count kernel is the same number without
+    * materializing any struct (FunctionsSpec pins `n_violations` ≡
+    * `size(violationsColumn)`, the HOF spec form).
     */
   def verdicts(docs: DataFrame, ref: DataFrame): DataFrame =
     docs.join(
@@ -94,8 +94,8 @@ object SpanInvariant {
           .hint("shuffle_hash"),
         Seq("doc_id"), "inner")
       .select(col("doc_id"), col("part"),
-        graft.functions.SpanMismatchIndices.spanMismatchCount(
-          col("spans"), col("ref_spans")).as("n_violations"))
+        graft.functions.SpanVerdictCount.spanVerdictCount(
+          col("spans"), col("ref_spans"), Nil).as("n_violations"))
       .select(col("doc_id"), col("part"),
         (col("n_violations") === 0).as("valid"), col("n_violations"))
 }
@@ -142,8 +142,8 @@ object Validation {
         Seq("doc_id"), "inner")
       .select(col("doc_id"), col("part"),
         // fused kernel: mismatch + rule counts in ONE pass over the
-        // span buffers (≡ spanMismatchCount + spanRuleViolationCount,
-        // FunctionsSpec)
+        // span buffers (≡ size(SpanInvariant.violationsColumn) +
+        // size(RuleCompiler.violations), FunctionsSpec)
         graft.functions.SpanVerdictCount.spanVerdictCount(
           col("spans"), col("ref_spans"),
           graft.rules.RuleCompiler.benchRules)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -126,89 +126,10 @@ case class SpanMismatchIndices(left: Expression, right: Expression)
   override def prettyName: String = "span_mismatch_indices"
 }
 
-/** Serializable tight-loop counter shared by the interpreted eval and
-  * the generated code (referenced via addReferenceObj).
-  */
-final class MismatchCounter(ki: Int, ti: Int, mi: Int, oi: Int)
-    extends Serializable {
-  import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-
-  def count(a: ArrayData, b: ArrayData): Int = (a, b) match {
-    case (ua: UnsafeArrayData, ub: UnsafeArrayData) =>
-      // reused-cursor walk: no per-span getStruct wrapper (see
-      // UnsafeSpanCursor); any other shape takes the generic path below
-      val ords = (ki, ti, mi, oi)
-      val na = ua.numElements(); val nb = ub.numElements()
-      val ca = new UnsafeSpanCursor; ca.reset(ua)
-      val cb = new UnsafeSpanCursor; cb.reset(ub)
-      val n = math.max(na, nb)
-      var c = 0
-      var i = 0
-      while (i < n) {
-        val m =
-          if (i >= na || i >= nb) true
-          else if (ua.isNullAt(i) || ub.isNullAt(i))
-            !(ua.isNullAt(i) && ub.isNullAt(i))
-          else SpanCompare.mismatchRows(ca.at(i), cb.at(i), ords)
-        if (m) c += 1
-        i += 1
-      }
-      c
-    case _ =>
-      val ords = (ki, ti, mi, oi)
-      val n = math.max(a.numElements(), b.numElements())
-      var c = 0
-      var i = 0
-      while (i < n) {
-        if (SpanCompare.mismatchAt(a, b, i, ords)) c += 1
-        i += 1
-      }
-      c
-  }
-}
-
-/** Count-only variant for verdict-level pipelines: identical mismatch
-  * semantics, zero per-row allocation, and a real doGenCode so the whole
-  * projection stage stays inside whole-stage codegen (a CodegenFallback
-  * expression would de-codegen the entire stage).
-  */
-case class SpanMismatchCount(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = left.nullable || right.nullable
-
-  @transient private lazy val counter: MismatchCounter = {
-    val (ki, ti, mi, oi) = SpanCompare.fieldOrdinals(left.dataType)
-    new MismatchCounter(ki, ti, mi, oi)
-  }
-
-  override def nullSafeEval(l: Any, r: Any): Any =
-    Integer.valueOf(counter.count(
-      l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode = {
-    val h = ctx.addReferenceObj("mismatchCounter", counter,
-      classOf[MismatchCounter].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $h.count($a, $b);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SpanMismatchCount =
-    copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "span_mismatch_count"
-}
-
 object SpanMismatchIndices {
   private val emptyResult = new GenericArrayData(Array.empty[Any])
 
   def spanMismatchIndices(spans: Column, refSpans: Column): Column =
     GraftBridge.column(SpanMismatchIndices(
-      GraftBridge.expression(spans), GraftBridge.expression(refSpans)))
-
-  def spanMismatchCount(spans: Column, refSpans: Column): Column =
-    GraftBridge.column(SpanMismatchCount(
       GraftBridge.expression(spans), GraftBridge.expression(refSpans)))
 }

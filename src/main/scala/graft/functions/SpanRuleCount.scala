@@ -5,7 +5,7 @@ import java.util.regex.Pattern
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.rules.{EnumRule, PatternRule, RangeRule, RequiredRule, SpanRule}
 
 /** Compact, driver-compiled form of a span rule, evaluated in a tight
-  * loop by [[SpanRuleViolationCount]]. Only the keyword set the flagship
+  * loop by [[SpanVerdictCount]]. Only the keyword set the flagship
   * rule set uses; anything else stays on the general HOF compiler.
   */
 sealed trait CompactRule extends Serializable
@@ -36,19 +36,18 @@ final case class RangeC(field: String, min: Option[Long], max: Option[Long])
 final case class MinLengthC(field: String, minLen: Int) extends CompactRule
 
 object CompactRule {
-  /** Compile the ADT rules that have a compact form; returns None if any
-    * rule is outside the compact surface (caller falls back to HOF).
+  /** Compile ADT rules to their compact form; throws
+    * IllegalArgumentException if any rule is outside the compact surface
+    * (such a rule set is evaluated by RuleCompiler.violations instead).
     */
-  def from(rules: Seq[SpanRule]): Option[Seq[CompactRule]] = {
-    val out = rules.map {
-      case EnumRule(f, allowed) => Some(EnumC(f, allowed.toSet))
-      case RequiredRule(f, whenKind) => Some(RequiredC(f, whenKind))
-      case PatternRule(f, re) => Some(PatternC(f, re))
-      case RangeRule(f, min, max) => Some(RangeC(f, min, max))
-      case graft.rules.MinLengthRule(f, m) => Some(MinLengthC(f, m))
-      case _ => None
-    }
-    if (out.forall(_.isDefined)) Some(out.flatten) else None
+  def from(rules: Seq[SpanRule]): Seq[CompactRule] = rules.map {
+    case EnumRule(f, allowed) => EnumC(f, allowed.toSet)
+    case RequiredRule(f, whenKind) => RequiredC(f, whenKind)
+    case PatternRule(f, re) => PatternC(f, re)
+    case RangeRule(f, min, max) => RangeC(f, min, max)
+    case graft.rules.MinLengthRule(f, m) => MinLengthC(f, m)
+    case _ => throw new IllegalArgumentException(
+      "rule set outside the compact surface — use RuleCompiler.violations")
   }
 }
 
@@ -197,8 +196,8 @@ private[functions] object FastPatterns {
   }
 }
 
-/** Serializable rule evaluator shared by interpreted eval and generated
-  * code; field ordinals resolved once at construction.
+/** Serializable rule evaluator of the fused kernel [[VerdictCounter]];
+  * field ordinals resolved once at construction.
   */
 final class RuleCounter(rules: Array[CompactRule],
     ordinals: Map[String, Int], kindOrd: Int,
@@ -245,31 +244,9 @@ final class RuleCounter(rules: Array[CompactRule],
   private val minLens: Array[Int] =
     rules.map { case MinLengthC(_, m) => m; case _ => 0 }
 
-  def count(arr: ArrayData): Int = arr match {
-    case ua: org.apache.spark.sql.catalyst.expressions.UnsafeArrayData =>
-      // reused-cursor walk — no per-span getStruct wrapper allocation
-      val cur = new UnsafeSpanCursor; cur.reset(ua)
-      val n = ua.numElements()
-      var count = 0
-      var i = 0
-      while (i < n) {
-        if (!ua.isNullAt(i)) count += countSpan(cur.at(i))
-        i += 1
-      }
-      count
-    case _ =>
-      val n = arr.numElements()
-      var count = 0
-      var i = 0
-      while (i < n) {
-        if (!arr.isNullAt(i)) count += countSpan(arr.getStruct(i, 4))
-        i += 1
-      }
-      count
-  }
-
-  /** Violations of ONE span row — the shared inner loop of [[count]]
-    * and the fused flagship kernel [[SpanVerdictCount]]. The span
+  /** Violations of ONE span row — the inner loop of the fused
+    * flagship kernel [[SpanVerdictCount]] for a span with no reference
+    * counterpart. The span
     * struct's four fields are decoded ONCE into locals; the rules loop
     * then reads locals — the per-rule `row.getUTF8String(ord)` form
     * allocated a fresh UTF8String wrapper per rule per span (≈25 per
@@ -293,9 +270,9 @@ final class RuleCounter(rules: Array[CompactRule],
     countSpanDecoded(n0, u0, v0, n1, u1, v1, n2, u2, v2, n3, u3, v3)
   }
 
-  /** The rules loop over ALREADY-DECODED field slots — shared with the
-    * fused flagship kernel, which decodes each span once for both the
-    * mismatch compare and the rules.
+  /** The rules loop over ALREADY-DECODED field slots — the fused
+    * flagship kernel decodes each span once for both the mismatch compare
+    * and the rules.
     */
   def countSpanDecoded(
       n0: Boolean, u0: UTF8String, v0: Long,
@@ -347,58 +324,15 @@ final class RuleCounter(rules: Array[CompactRule],
   }
 }
 
-/** Count of rule-keyword violations across a span array — the custom
-  * fast path of the rule compiler for verdict-level queries (violation
-  * DETAIL rows keep the general Column compiler, which is oracle-gated).
-  * One loop per row, zero per-element allocation, real doGenCode so the
-  * projection stage stays in whole-stage codegen; semantic equivalence
-  * with RuleCompiler.violations is spec-tested.
-  */
-case class SpanRuleViolationCount(child: Expression,
-    rules: Seq[CompactRule])
-    extends UnaryExpression {
-
-  override def dataType: DataType = IntegerType
-
-  @transient private lazy val counter: RuleCounter = {
-    val st = child.dataType.asInstanceOf[ArrayType]
-      .elementType.asInstanceOf[StructType]
-    val ordinals = st.fieldNames.zipWithIndex.toMap
-    new RuleCounter(rules.toArray, ordinals, ordinals("kind"),
-      st.fields.map(_.dataType == StringType))
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    Integer.valueOf(counter.count(v.asInstanceOf[ArrayData]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode = {
-    val h = ctx.addReferenceObj("ruleCounter", counter,
-      classOf[RuleCounter].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $h.count($a);")
-  }
-
-  override protected def withNewChildInternal(c: Expression)
-      : SpanRuleViolationCount = copy(child = c)
-  override def prettyName: String = "span_rule_violation_count"
-}
-
-object SpanRuleViolationCount {
-  def spanRuleViolationCount(spans: Column, rules: Seq[SpanRule]): Column = {
-    val compact = CompactRule.from(rules).getOrElse(
-      throw new IllegalArgumentException(
-        "rule set outside the compact surface — use RuleCompiler.violations"))
-    GraftBridge.column(
-      SpanRuleViolationCount(GraftBridge.expression(spans), compact))
-  }
-}
-
-/** FUSED flagship verdict kernel: span-sequence mismatches PLUS rule
-  * violations in ONE loop over the two span buffers. The separate
-  * [[SpanMismatchCount]] + [[SpanRuleViolationCount]] pair walks the
-  * docs-side span array twice (two codegen round-trips, two bounds/null
-  * scans, two getStruct decodes per span); the fusion walks it once and
-  * is exactly their sum (FunctionsSpec equality on the fixture join).
+/** FUSED verdict kernel: span-sequence mismatches PLUS rule violations
+  * in ONE loop over the two span buffers, the only counting kernel for
+  * spans. A mismatch kernel plus a separate rule-count kernel would walk
+  * the docs-side span array twice (two codegen round-trips, two
+  * bounds/null scans, two getStruct decodes per span); the fusion walks
+  * it once. It equals `size(SpanInvariant.violationsColumn)` plus
+  * `size(RuleCompiler.violations)`, the two HOF spec forms (FunctionsSpec
+  * on the fixture join); with an empty rule set it is the mismatch count
+  * alone ([[graft.checks.SpanInvariant.verdicts]]).
   */
 final class VerdictCounter(ki: Int, ti: Int, mi: Int, oi: Int,
     rc: RuleCounter) extends Serializable {
@@ -414,8 +348,8 @@ final class VerdictCounter(ki: Int, ti: Int, mi: Int, oi: Int,
     * (8-byte offset&length slot per element after the header — the
     * exact arithmetic of UnsafeArrayData.getStruct); any other input
     * shape falls back to the unchanged generic walk, and FunctionsSpec
-    * pins fused ≡ mismatch+rules over the real corpus (which runs this
-    * path).
+    * pins fused ≡ HOF mismatches + HOF rule violations over the real
+    * corpus (which runs this path).
     */
   def count(a: ArrayData, b: ArrayData): Int = (a, b) match {
     case (ua: org.apache.spark.sql.catalyst.expressions.UnsafeArrayData,
@@ -446,9 +380,7 @@ final class VerdictCounter(ki: Int, ti: Int, mi: Int, oi: Int,
           if (!aN) c += rc.countSpan(structA(i))
         } else {
           // decode the a-side span ONCE; both the mismatch compare and
-          // the rules loop read the same locals (the unfused pair
-          // decoded it twice — an extra UnsafeRow wrapper plus four
-          // field re-reads per span)
+          // the rules loop read the same locals
           val sa = structA(i)
           val sb = structB(i)
           val ak = if (sa.isNullAt(ki)) null else sa.getUTF8String(ki)
@@ -520,11 +452,8 @@ case class SpanVerdictCount(left: Expression, right: Expression,
 object SpanVerdictCount {
   def spanVerdictCount(spans: Column, refSpans: Column,
       rules: Seq[SpanRule]): Column = {
-    val compact = CompactRule.from(rules).getOrElse(
-      throw new IllegalArgumentException(
-        "rule set outside the compact surface — use RuleCompiler.violations"))
     GraftBridge.column(SpanVerdictCount(
       GraftBridge.expression(spans), GraftBridge.expression(refSpans),
-      compact))
+      CompactRule.from(rules)))
   }
 }

@@ -18,14 +18,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * cost of d_minhash_pairs / d_simhash_pairs at sf0.1.
   */
 object TextHash {
-  def minhashSignature(sh: Column, numHashes: Int): Column =
-    GraftBridge.column(MinHashSignature(
-      GraftBridge.expression(sh), numHashes))
-
-  def minhashWords(w: Column, n: Int, numHashes: Int): Column =
-    GraftBridge.column(MinHashWords(GraftBridge.expression(w), n,
-      numHashes))
-
   def minhashText(text: Column, n: Int, numHashes: Int): Column =
     GraftBridge.column(MinHashText(GraftBridge.expression(text), n,
       numHashes))
@@ -85,124 +77,37 @@ case class Shingles(child: Expression, n: Int) extends UnaryExpression {
   override def prettyName: String = "word_shingles"
 }
 
-/** MinHash kernel: ONE full string hash per shingle (`xxhash64(x)`,
-  * default seed 42), then the seed-k value is an XXH64 long remix of
-  * that base — the exact semantics of Spark's
-  * `xxhash64(lit(k), xxhash64(x))` (hashInt of the k literal folded
-  * into the 42 start seed, hoisted per seed since it is constant, then
-  * hashLong of the base). A per-seed remix of a common 64-bit base is
-  * the standard production MinHash family: the S-curve depends only on
-  * the per-hash collision probability (= Jaccard), which any family of
-  * independent-looking permutations of a collision-free base preserves
-  * (base collisions are 2⁻⁶⁴); fixture recall is re-verified at 1.0 at
-  * sf0.01 AND sf0.1. The r3-initial kernel hashed the full string once
-  * PER SEED — 96 string hashes per shingle; this does 1 string hash +
-  * 96 single-long mixes. All minima update in ONE pass.
-  */
-final class MinHashKernel(numHashes: Int) extends Serializable {
-  private val seedH: Array[Long] =
-    Array.tabulate(numHashes)(k => XXH64.hashInt(k, 42L))
-
-  def signature(sh: ArrayData): ArrayData = {
-    val n = sh.numElements()
-    val out = new Array[Any](numHashes)
-    if (n == 0) return new GenericArrayData(out) // nulls, like array_min
-    val mins = Array.fill(numHashes)(Long.MaxValue)
-    var i = 0
-    while (i < n) {
-      val base = XXH64.hashUTF8String(sh.getUTF8String(i), 42L)
-      var k = 0
-      while (k < numHashes) {
-        val h = XXH64.hashLong(base, seedH(k))
-        if (h < mins(k)) mins(k) = h
-        k += 1
-      }
-      i += 1
-    }
-    var k = 0
-    while (k < numHashes) { out(k) = mins(k); k += 1 }
-    new GenericArrayData(out)
-  }
-}
-
-/** FUSED words→signature MinHash kernel: slides the n-word window over
-  * the words array, serializes each shingle into a REUSED byte buffer
-  * (space-joined, exactly `concat_ws(" ", ...)`'s bytes) and hashes the
-  * buffer slice — so the signature projection allocates NO shingle
-  * strings, no LinkedHashSet and no shingle array at all. Bit-equal to
-  * `MinHashSignature(Shingles(w))` (FunctionsSpec): XXH64 over the same
-  * bytes is the same base hash, and the per-seed MINIMA are invariant
-  * to the duplicate shingles that `array_distinct` removes. This is the
-  * banding path's projection; at 2M+ docs the shingle-materializing
-  * form spent ~45% of some stages in GC from the per-shingle
-  * UTF8String/set churn (round-4 scaling Job C event logs) — the fused
-  * form is the kernel you actually run at 100 TB.
-  */
-final class MinHashWordsKernel(n: Int, numHashes: Int)
-    extends Serializable {
-  import org.apache.spark.unsafe.Platform
-
-  private val seedH: Array[Long] =
-    Array.tabulate(numHashes)(k => XXH64.hashInt(k, 42L))
-
-  @transient private lazy val localBuf: ThreadLocal[Array[Byte]] =
-    ThreadLocal.withInitial(() => new Array[Byte](256))
-
-  def signature(w: ArrayData): ArrayData = {
-    val len = w.numElements()
-    val out = new Array[Any](numHashes)
-    if (len < n) return new GenericArrayData(out) // = minhash of no shingles
-    val mins = Array.fill(numHashes)(Long.MaxValue)
-    var buf = localBuf.get()
-    var i = 0
-    while (i <= len - n) {
-      var total = n - 1
-      var j = 0
-      while (j < n) { total += w.getUTF8String(i + j).numBytes(); j += 1 }
-      if (buf.length < total) {
-        buf = new Array[Byte](math.max(total, buf.length * 2))
-        localBuf.set(buf)
-      }
-      var off = 0
-      j = 0
-      while (j < n) {
-        val s = w.getUTF8String(i + j)
-        s.writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET + off)
-        off += s.numBytes()
-        if (j < n - 1) { buf(off) = ' '; off += 1 }
-        j += 1
-      }
-      val base =
-        XXH64.hashUnsafeBytes(buf, Platform.BYTE_ARRAY_OFFSET, off, 42L)
-      var k = 0
-      while (k < numHashes) {
-        val h = XXH64.hashLong(base, seedH(k))
-        if (h < mins(k)) mins(k) = h
-        k += 1
-      }
-      i += 1
-    }
-    var k = 0
-    while (k < numHashes) { out(k) = mins(k); k += 1 }
-    new GenericArrayData(out)
-  }
-}
-
-/** FULLY fused text→signature MinHash kernel (round 6): splits the raw
-  * UTF8String on single spaces IN PLACE — limit -1 semantics, bit-equal
-  * to `split(text, " ")` (empties kept, and a space byte never occurs
-  * inside a UTF-8 multi-byte sequence, so the byte-level scan is exact)
-  * — and exploits that consecutive words in the ORIGINAL text are
-  * already single-space-joined: an n-word shingle's
-  * `concat_ws(" ", ...)` bytes are precisely a CONTIGUOUS slice of the
-  * text, so each window hashes straight from the text's base memory.
-  * Zero per-row allocation (no String, no regex, no words array, no
-  * per-token UTF8Strings, no shingle buffer copy — only the reused
-  * word-offset int buffer and the signature array). The round-6
+/** FULLY fused text→signature MinHash kernel (round 6), the only
+  * MinHash kernel: splits the raw UTF8String on single spaces IN PLACE —
+  * limit -1 semantics, bit-equal to `split(text, " ")` (empties kept,
+  * and a space byte never occurs inside a UTF-8 multi-byte sequence, so
+  * the byte-level scan is exact) — and exploits that consecutive words
+  * in the ORIGINAL text are already single-space-joined: an n-word
+  * shingle's `concat_ws(" ", ...)` bytes are precisely a CONTIGUOUS
+  * slice of the text, so each window hashes straight from the text's
+  * base memory. Zero per-row allocation (no String, no regex, no words
+  * array, no per-token UTF8Strings, no shingle buffer copy — only the
+  * reused word-offset int buffer and the signature array). The round-6
   * kernel-only scaling probe showed the banding stage's 8→32
   * non-scaling residue lives in the split/allocation input path, not
-  * the shuffle — this kernel removes that path. Bit-equal to
-  * `MinHashWords(split(text, " "))` (FunctionsSpec).
+  * the shuffle — this kernel removes that path.
+  *
+  * Hash family: ONE full XXH64 per shingle (`xxhash64(x)`, default seed
+  * 42), then the seed-k value is an XXH64 long remix of that base — the
+  * exact semantics of Spark's `xxhash64(lit(k), xxhash64(x))` (hashInt
+  * of the k literal folded into the 42 start seed, hoisted per seed
+  * since it is constant, then hashLong of the base). A per-seed remix of
+  * a common 64-bit base is the standard production MinHash family: the
+  * S-curve depends only on the per-hash collision probability
+  * (= Jaccard), which any family of independent-looking permutations of
+  * a collision-free base preserves (base collisions are 2⁻⁶⁴); fixture
+  * recall is re-verified at 1.0 at sf0.01 AND sf0.1. 1 string hash +
+  * 96 single-long mixes per shingle, all minima updated in ONE pass.
+  * The per-seed minima are invariant to duplicate shingles, so hashing
+  * every window equals hashing the distinct shingles `array_distinct`
+  * keeps. Bit-equal to the HOF spec form
+  * `Dedup.minhashSignatureHof(Dedup.shinglesOfHof(split(text, " ")))`
+  * (FunctionsSpec, including split's limit -1 edge cases).
   */
 final class MinHashTextKernel(n: Int, numHashes: Int)
     extends Serializable {
@@ -277,54 +182,6 @@ case class MinHashText(child: Expression, n: Int, numHashes: Int)
       : MinHashText = copy(child = newChild)
 
   override def prettyName: String = "minhash_text"
-}
-
-/** `array<long>` MinHash signature straight from the words array. */
-case class MinHashWords(child: Expression, n: Int, numHashes: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType)
-
-  @transient private lazy val kernel = new MinHashWordsKernel(n, numHashes)
-
-  override def nullSafeEval(v: Any): Any =
-    kernel.signature(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode = {
-    val h = ctx.addReferenceObj("minHashWordsKernel", kernel,
-      classOf[MinHashWordsKernel].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $h.signature($a);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : MinHashWords = copy(child = newChild)
-
-  override def prettyName: String = "minhash_words"
-}
-
-/** `array<long>` of the `numHashes` MinHash minima of a shingle array. */
-case class MinHashSignature(child: Expression, numHashes: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType)
-
-  @transient private lazy val kernel = new MinHashKernel(numHashes)
-
-  override def nullSafeEval(v: Any): Any =
-    kernel.signature(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode = {
-    val h = ctx.addReferenceObj("minHashKernel", kernel,
-      classOf[MinHashKernel].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $h.signature($a);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : MinHashSignature = copy(child = newChild)
-
-  override def prettyName: String = "minhash_signature"
 }
 
 /** SimHash kernel: distinct tokens of the words array, each hashed to

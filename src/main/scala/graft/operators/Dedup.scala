@@ -140,21 +140,19 @@ object Dedup {
 
   /** MinHash signature matrix, HOF spec form: min over shingles of
     * xxhash64(seed, xxhash64(shingle)) per seed — one full string hash
-    * per shingle, remixed per seed (see the MinHashKernel Scaladoc for
-    * why this family preserves the S-curve). The production path is the
-    * [[graft.functions.TextHash.minhashSignature]] codegen kernel — one
-    * pass over the shingle array updating all 96 minima (the 96 separate
-    * interpreted folds here were the dominant cost of d_minhash_pairs);
-    * FunctionsSpec asserts the two agree hash-for-hash.
+    * per shingle, remixed per seed (see the
+    * [[graft.functions.MinHashTextKernel]] Scaladoc for why this family
+    * preserves the S-curve). The production path is that codegen kernel
+    * ([[graft.functions.TextHash.minhashText]]) — one pass over the raw
+    * text updating all 96 minima (the 96 separate interpreted folds here
+    * were the dominant cost of d_minhash_pairs); FunctionsSpec asserts
+    * that `minhashSignatureHof(shinglesOfHof(split(text, " ")))` agrees
+    * with it hash-for-hash.
     */
   def minhashSignatureHof(sh: Column): Column =
     array((0 until NumHashes).map { seed =>
       array_min(transform(sh, x => xxhash64(lit(seed), xxhash64(x))))
     }: _*)
-
-  /** Production MinHash signature: one-pass codegen kernel. */
-  def minhashSignature(sh: Column): Column =
-    graft.functions.TextHash.minhashSignature(sh, NumHashes)
 
   /** LSH candidate pairs: band the signature, shuffle on (band, hash of
     * band rows), pair up within buckets, then verify with exact Jaccard.
@@ -180,7 +178,7 @@ object Dedup {
     * byte slice of the text itself: no String/regex split, no words
     * array, no shingle strings/sets/buffers allocated (the minima are
     * invariant to the duplicates array_distinct would drop, so it is
-    * bit-equal to minhashSignature(shinglesOf(split(text))) —
+    * bit-equal to minhashSignatureHof(shinglesOfHof(split(text))) —
     * FunctionsSpec, including split's limit -1 edge cases).
     */
   def bandKeysOf(corpusDf: DataFrame): DataFrame = {

@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.checks.SpanInvariant
 import graft.functions.{NumStatsAgg, TDigestQuantile}
 import graft.operators.Skew
 import graft.rules._
@@ -141,38 +143,21 @@ class FunctionsSpec extends SparkSpec {
       Dedup.shinglesOfHof(col("w")).as("spec"))
       .filter(col("fast") =!= col("spec")).count()
     assert(sg === 0)
-    // MinHash: all 96 minima from the one-pass kernel must equal the 96
-    // interpreted array_min(transform(...)) folds, hash for hash
-    val mh = sh.select(
-      Dedup.minhashSignature(col("sh")).as("fast"),
-      Dedup.minhashSignatureHof(col("sh")).as("spec"))
-      .filter(col("fast") =!= col("spec")).count()
-    assert(mh === 0)
-    // FUSED words→signature kernel (no shingle materialization at all)
-    // == signature over the distinct shingle array: XXH64 over the
-    // reused byte buffer is the same base hash as over the concat_ws
-    // string, and minima are invariant to duplicate shingles
-    val mw = sh.select(
-      graft.functions.TextHash
-        .minhashWords(col("w"), 3, Dedup.NumHashes).as("fast"),
-      Dedup.minhashSignatureHof(Dedup.shinglesOfHof(col("w"))).as("spec"))
-      .filter(col("fast") =!= col("spec")).count()
-    assert(mw === 0)
-    // FULLY fused text→signature kernel (in-place byte split, windows
-    // hashed as contiguous text slices) == the words-array kernel over
-    // split(text, " "), which is itself == the HOF spec form above.
-    // Includes the limit -1 split edges: empty text, consecutive and
-    // trailing spaces, short docs (asserted on an explicit edge corpus
-    // below the real one).
+    // MinHash: all 96 minima of the fully fused text→signature kernel
+    // (in-place byte split, windows hashed as contiguous text slices)
+    // must equal the 96 interpreted array_min(transform(...)) folds over
+    // the distinct shingles of split(text, " "), hash for hash; `w` is
+    // staged in its own projection so the HOF form splits once per row
     val tw = Dedup.corpus(spark, dir)
       .select(col("text"), split(col("text"), " ").as("w"))
     val mt = tw.select(
       graft.functions.TextHash.minhashText(col("text"), 3,
         Dedup.NumHashes).as("fast"),
-      graft.functions.TextHash
-        .minhashWords(col("w"), 3, Dedup.NumHashes).as("spec"))
+      Dedup.minhashSignatureHof(Dedup.shinglesOfHof(col("w"))).as("spec"))
       .filter(col("fast") =!= col("spec")).count()
     assert(mt === 0)
+    // split's limit -1 edges: empty text, consecutive and trailing
+    // spaces, short docs (null minima, hence <=>), multi-byte words
     val edges = Seq("", " ", "  ", "a", "a b", "a b c", "a  b  c",
       " a b c ", "a b c d e", "ab  cd", "µ héllo wörld µ x")
       .toDF("text")
@@ -180,8 +165,7 @@ class FunctionsSpec extends SparkSpec {
     val me = edges.select(
       graft.functions.TextHash.minhashText(col("text"), 3,
         Dedup.NumHashes).as("fast"),
-      graft.functions.TextHash
-        .minhashWords(col("w"), 3, Dedup.NumHashes).as("spec"))
+      Dedup.minhashSignatureHof(Dedup.shinglesOfHof(col("w"))).as("spec"))
       .filter(not(col("fast") <=> col("spec"))).count()
     assert(me === 0)
     // SimHash: kernel == fold-then-collapse, including the md5-top-60-bit
@@ -270,6 +254,18 @@ class FunctionsSpec extends SparkSpec {
     assert(dup === 0)
   }
 
+  /** One doc whose single span has null text and media_ref, and its
+    * reference with one extra trailing span: exactly 1 mismatch.
+    */
+  private def lengthMismatchPair(): (DataFrame, DataFrame) = {
+    val a = Seq(graft.model.Doc("x",
+      Seq(graft.model.Span("text", null, null, 0)), "p"))
+    val b = Seq(graft.model.Doc("x",
+      Seq(graft.model.Span("text", null, null, 0),
+        graft.model.Span("image", null, "m1", 1)), "p"))
+    (spark.createDataFrame(a), spark.createDataFrame(b))
+  }
+
   test("custom SpanMismatchIndices expression ≡ HOF violations column") {
     val documents = Tables.documents(spark, "/root/testdata/sf0.001")
     val docs = graft.data.Interleaved.docs(documents)
@@ -285,14 +281,9 @@ class FunctionsSpec extends SparkSpec {
     assert(both.filter(col("hof") =!= col("fast")).count() === 0)
     assert(both.filter(size(col("fast")) > 0).count() > 0)
     // length-mismatch and null-safety edge cases
-    val a = Seq(graft.model.Doc("x",
-      Seq(graft.model.Span("text", null, null, 0)), "p"))
-    val b = Seq(graft.model.Doc("x",
-      Seq(graft.model.Span("text", null, null, 0),
-        graft.model.Span("image", null, "m1", 1)), "p"))
-    val j2 = spark.createDataFrame(a).join(
-      spark.createDataFrame(b)
-        .select(col("doc_id"), col("spans").as("ref_spans")), Seq("doc_id"))
+    val (a, b) = lengthMismatchPair()
+    val j2 = a.join(b.select(col("doc_id"), col("spans").as("ref_spans")),
+      Seq("doc_id"))
     val r2 = j2.select(
       graft.checks.SpanInvariant
         .violationsColumnFast(col("spans"), col("ref_spans")).as("v"))
@@ -300,14 +291,20 @@ class FunctionsSpec extends SparkSpec {
     assert(r2 === 1) // only the missing trailing span mismatches
   }
 
-  test("compact SpanRuleViolationCount ≡ HOF rule compiler count") {
+  test("SpanVerdictCount self-join rule count ≡ HOF rule compiler count") {
+    // a self-join has no mismatches, so the fused kernel over (spans,
+    // spans) counts rule violations only. No input here has a null span
+    // element: the kernel skips one, while the HOF compiler's
+    // unconditional `required` rules flag it
+    def ruleCount(rules: Seq[SpanRule]): Column =
+      graft.functions.SpanVerdictCount.spanVerdictCount(col("spans"),
+        col("spans"), rules)
     val documents = Tables.documents(spark, "/root/testdata/sf0.001")
     val docs = graft.data.Interleaved.docs(documents)
     for (rules <- Seq(RuleCompiler.docRules, RuleCompiler.benchRules)) {
       val both = docs.select(
         size(RuleCompiler.violations(col("spans"), rules)).as("hof"),
-        graft.functions.SpanRuleViolationCount.spanRuleViolationCount(
-          col("spans"), rules).as("fast"))
+        ruleCount(rules).as("fast"))
       assert(both.filter(col("hof") =!= col("fast")).count() === 0)
       assert(both.filter(col("fast") > 0).count() > 0)
     }
@@ -335,13 +332,11 @@ class FunctionsSpec extends SparkSpec {
     val adv = spanDocs.select(
       size(RuleCompiler.violations(col("spans"),
         RuleCompiler.benchRules)).as("hof"),
-      graft.functions.SpanRuleViolationCount.spanRuleViolationCount(
-        col("spans"), RuleCompiler.benchRules).as("fast"))
+      ruleCount(RuleCompiler.benchRules).as("fast"))
     assert(adv.filter(col("hof") =!= col("fast")).count() === 0)
   }
 
-  test("fused SpanVerdictCount ≡ spanMismatchCount + " +
-      "spanRuleViolationCount on the fixture join") {
+  test("fused SpanVerdictCount ≡ HOF mismatches + HOF rule violations") {
     val documents = Tables.documents(spark, "/root/testdata/sf0.001")
     val docs = graft.data.Interleaved.docs(documents)
     val ref = graft.data.Interleaved.referenceSpans(documents)
@@ -351,31 +346,27 @@ class FunctionsSpec extends SparkSpec {
     val both = joined.select(
       graft.functions.SpanVerdictCount.spanVerdictCount(col("spans"),
         col("ref_spans"), RuleCompiler.benchRules).as("fused"),
-      (graft.functions.SpanMismatchIndices.spanMismatchCount(col("spans"),
-        col("ref_spans")) +
-        graft.functions.SpanRuleViolationCount.spanRuleViolationCount(
-          col("spans"), RuleCompiler.benchRules)).as("pair"))
-    assert(both.filter(col("fused") =!= col("pair")).count() === 0)
+      (size(SpanInvariant.violationsColumn(col("spans"), col("ref_spans"))) +
+        size(RuleCompiler.violations(col("spans"), RuleCompiler.benchRules)))
+        .as("hof"))
+    assert(both.filter(col("fused") =!= col("hof")).count() === 0)
     assert(both.filter(col("fused") > 0).count() > 0)
-  }
-
-  test("registry binds rulesets and mirrors reference error messages") {
-    val resolved = Seq(
-      ("d1", "https://example.org/schemas/kubernetes.json", null),
-      ("d2", "https://example.org/schemas/unknown.json", null),
-      ("d3", "file:///schemas/missing.yaml", null),
-      ("d4", null, "No schema found in YAML file or provided as parameter"))
-      .toDF("doc_id", "schema_url", "error")
-    val m = Registry.bind(resolved)
-      .select("doc_id", "ruleset", "error")
-      .collect().map(r => r.getString(0) -> (r.getString(1), r.getString(2)))
-      .toMap
-    assert(m("d1") === ("rs-k8s", null))
-    assert(m("d2") ===
-      (null, "HTTP request failed with status code 404"))
-    assert(m("d3") ===
-      (null, "NoSuchFileException: file:///schemas/missing.yaml"))
-    assert(m("d4") ===
-      (null, "No schema found in YAML file or provided as parameter"))
+    // SpanInvariant.verdicts runs the kernel with no rules: its
+    // n_violations is the HOF mismatch count, doc for doc
+    def verdictCounts(d: DataFrame, r: DataFrame): Seq[(String, Int)] =
+      SpanInvariant.verdicts(d, r).select(col("doc_id"), col("n_violations"))
+        .as[(String, Int)].collect().toSeq.sorted
+    def hofCounts(d: DataFrame, r: DataFrame): Seq[(String, Int)] =
+      d.join(r.select(col("doc_id"), col("spans").as("ref_spans")),
+          Seq("doc_id"))
+        .select(col("doc_id"), size(SpanInvariant.violationsColumn(
+          col("spans"), col("ref_spans"))))
+        .as[(String, Int)].collect().toSeq.sorted
+    val fixture = verdictCounts(docs, ref)
+    assert(fixture === hofCounts(docs, ref))
+    assert(fixture.count(_._2 > 0) > 0)
+    val (a, b) = lengthMismatchPair()
+    assert(verdictCounts(a, b) === Seq(("x", 1)))
+    assert(hofCounts(a, b) === Seq(("x", 1)))
   }
 }

@@ -148,8 +148,8 @@ class JsonSchemaSpec extends SparkSpec {
   }
 
   test("required: explicit JSON null counts as present (NetworkNT parity)") {
-    // Spark 4.1 semantics (Probe8): missing key → SQL NULL from
-    // try_variant_get; explicit null → non-null VOID variant
+    // Spark 4.1 semantics, pinned by this test's two docs: missing key →
+    // SQL NULL from try_variant_get; explicit null → non-null VOID variant
     val schema =
       """{"type":"object","required":["x"],"properties":{}}"""
     val v = violationsOf(schema,

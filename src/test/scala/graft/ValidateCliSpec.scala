@@ -170,6 +170,19 @@ class ValidateCliSpec extends SparkSpec {
       "HTTP request failed with status code 404")
   }
 
+  test("missing local --schema file yields NoSuchFileException per doc") {
+    // error-as-data parity (YamlSchemaValidator.java:78-81): the run
+    // completes and every doc carries the missing path in its message
+    val f = tmpFile("two.yaml", "name: a\n---\nname: b\n")
+    val missing = Files.createTempDirectory("graft-nosuch")
+      .resolve("missing.json").toString
+    val (rows, summary) = Validate.runFull(spark, Seq(f),
+      schema = Some(missing))
+    assert(summary.docs === 2 && !summary.allValid)
+    assert(rows.map(r => (r.valid, r.errors.map(_._2))) ===
+      Seq.fill(2)((false, Seq(s"NoSuchFileException: $missing"))))
+  }
+
   test("stdin entry: no files reads stdin once, keyed 'stdin' " +
       "(YamlSchemaValidatorStdinTest.java:23-36)") {
     val (rows, summary) = Validate.runFull(spark, Seq.empty,
