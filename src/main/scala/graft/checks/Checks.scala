@@ -18,7 +18,7 @@ object SpanInvariant {
     * shuffle is elided entirely. No other shuffle exists in this check.
     */
   /** The violations array for one doc given its spans and the reference
-    * spans — reusable from batch and streaming plans alike.
+    * spans.
     */
   def violationsColumn(spans: Column, refSpans: Column): Column = {
     val zipped = arrays_zip(spans.as("spans"), refSpans.as("ref_spans"))
@@ -57,9 +57,8 @@ object SpanInvariant {
           .as("message"),
         lit("#/properties/spans/spanSequence").as("schemaLocation")))
 
-  /** Annotate each doc with its violations array: doc_id-keyed join with
-    * the reference, one codegen'd projection. Preserves every other input
-    * column (streaming keeps `event_time`).
+  /** The one doc↔reference join of every span check: an inner join on
+    * doc_id that adds the reference's spans as `ref_spans`.
     *
     * The reference side is hinted `shuffle_hash`: it is the same
     * cardinality as the fact side, so the optimizer's broadcast choice
@@ -68,17 +67,19 @@ object SpanInvariant {
     * doc_id in Iceberg the shuffle is elided entirely
     * (storage-partitioned join).
     */
-  def annotate(docs: DataFrame, ref: DataFrame): DataFrame =
+  private[checks] def withReference(docs: DataFrame, ref: DataFrame)
+      : DataFrame =
     docs.join(
         ref.select(col("doc_id"), col("spans").as("ref_spans"))
           .hint("shuffle_hash"),
         Seq("doc_id"), "inner")
-      .withColumn("violations",
-        violationsColumnFast(col("spans"), col("ref_spans")))
-      .drop("ref_spans")
 
+  /** Each doc's violations array: the reference join, then one codegen'd
+    * projection.
+    */
   def mismatches(docs: DataFrame, ref: DataFrame): DataFrame =
-    annotate(docs, ref).select(col("doc_id"), col("part"), col("violations"))
+    withReference(docs, ref).select(col("doc_id"), col("part"),
+      violationsColumnFast(col("spans"), col("ref_spans")).as("violations"))
 
   /** Per-doc verdicts: valid iff zero span mismatches. Counts via the
     * codegen'd [[graft.functions.SpanVerdictCount]] kernel with an empty
@@ -89,10 +90,7 @@ object SpanInvariant {
     * `size(violationsColumn)`, the HOF spec form).
     */
   def verdicts(docs: DataFrame, ref: DataFrame): DataFrame =
-    docs.join(
-        ref.select(col("doc_id"), col("spans").as("ref_spans"))
-          .hint("shuffle_hash"),
-        Seq("doc_id"), "inner")
+    withReference(docs, ref)
       .select(col("doc_id"), col("part"),
         graft.functions.SpanVerdictCount.spanVerdictCount(
           col("spans"), col("ref_spans"), Nil).as("n_violations"))
@@ -136,10 +134,7 @@ object Validation {
     * docs/sec metric times.
     */
   def fullVerdicts(docs: DataFrame, ref: DataFrame): DataFrame =
-    docs.join(
-        ref.select(col("doc_id"), col("spans").as("ref_spans"))
-          .hint("shuffle_hash"),
-        Seq("doc_id"), "inner")
+    SpanInvariant.withReference(docs, ref)
       .select(col("doc_id"), col("part"),
         // fused kernel: mismatch + rule counts in ONE pass over the
         // span buffers (≡ size(SpanInvariant.violationsColumn) +

@@ -14,8 +14,8 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.rules.{EnumRule, PatternRule, RangeRule, RequiredRule, SpanRule}
 
 /** Compact, driver-compiled form of a span rule, evaluated in a tight
-  * loop by [[SpanVerdictCount]]. Only the keyword set the flagship
-  * rule set uses; anything else stays on the general HOF compiler.
+  * loop by [[SpanVerdictCount]]: one case per [[graft.rules.SpanRule]]
+  * keyword.
   */
 sealed trait CompactRule extends Serializable
 final case class EnumC(field: String, allowed: Set[String])
@@ -36,9 +36,8 @@ final case class RangeC(field: String, min: Option[Long], max: Option[Long])
 final case class MinLengthC(field: String, minLen: Int) extends CompactRule
 
 object CompactRule {
-  /** Compile ADT rules to their compact form; throws
-    * IllegalArgumentException if any rule is outside the compact surface
-    * (such a rule set is evaluated by RuleCompiler.violations instead).
+  /** Compile ADT rules to their compact form (`SpanRule` is sealed, so
+    * the match is exhaustive).
     */
   def from(rules: Seq[SpanRule]): Seq[CompactRule] = rules.map {
     case EnumRule(f, allowed) => EnumC(f, allowed.toSet)
@@ -46,8 +45,6 @@ object CompactRule {
     case PatternRule(f, re) => PatternC(f, re)
     case RangeRule(f, min, max) => RangeC(f, min, max)
     case graft.rules.MinLengthRule(f, m) => MinLengthC(f, m)
-    case _ => throw new IllegalArgumentException(
-      "rule set outside the compact surface — use RuleCompiler.violations")
   }
 }
 

@@ -189,10 +189,9 @@ object Dedup {
     docs.select(col("doc_id"), explode(bandHashesOf(col("sig"))).as("bh"))
   }
 
-  /** The 32 packed band keys of a signature column — shared by the batch
-    * banding join, the persisted index, and the streaming banding state
-    * ([[graft.streaming.StreamOps.bandEvents]]), so all three produce
-    * bit-identical keys by construction.
+  /** The 32 packed band keys of a signature column — shared (through
+    * [[bandKeysOf]]) by the batch banding join and the persisted index,
+    * so both produce bit-identical keys by construction.
     */
   def bandHashesOf(sig: Column): Column =
     array((0 until NumHashes / BandSize).map { b =>

@@ -92,32 +92,6 @@ object Relational {
       .orderBy(col("o_custkey"), col("rn"))
   }
 
-  /** Skew-safe [[windowTopK]]: identical output, but a hot customer
-    * never single-tasks. Rows first compete within (customer, salt) —
-    * the salt is a deterministic hash of the row, so partitions are
-    * bounded at ~rows/salts — and only each salt's local top-k (≤ k·S
-    * candidate rows per customer, a constant) reaches the per-customer
-    * final window. The same two-level discipline as
-    * [[sessionizeSkewSafe]], specialized to top-k's happy property
-    * that a global top-k row must be in its salt's local top-k.
-    */
-  def windowTopKSkewSafe(s: SparkSession, dir: String,
-      salts: Int = 8): DataFrame = {
-    val order = Seq(col("o_totalprice").desc, col("o_orderkey"))
-    val w1 = Window.partitionBy(col("o_custkey"), col("salt"))
-      .orderBy(order: _*)
-    val w2 = Window.partitionBy(col("o_custkey")).orderBy(order: _*)
-    Tables.orders(s, dir)
-      .withColumn("salt", pmod(xxhash64(col("o_orderkey")), lit(salts)))
-      .withColumn("rn1", row_number().over(w1))
-      .filter(col("rn1") <= 3)
-      .withColumn("rn", row_number().over(w2))
-      .filter(col("rn") <= 3)
-      .select(col("o_custkey"), col("o_orderkey"),
-        round(col("o_totalprice"), 4).as("price"), col("rn"))
-      .orderBy(col("o_custkey"), col("rn"))
-  }
-
   /** Global sort + limit (TakeOrderedAndProject — no full sort at scale). */
   def sortLimit(s: SparkSession, dir: String): DataFrame =
     Tables.lineitem(s, dir)
@@ -308,8 +282,7 @@ object Relational {
     * user_id, so this is ONE hash shuffle and linear per-user work;
     * the per-user event list never sits in memory (WindowExec streams
     * the frame). Hot users are the standard skew story (AQE/salting by
-    * day); the streaming twin is `session_window` in [[graft.streaming]]
-    * terms.
+    * day). Oracle query `q21_sessions` gates it.
     */
   def sessionize(s: SparkSession, dir: String): DataFrame =
     sessionizeOf(Tables.events(s, dir), SessionGapUs)
@@ -321,11 +294,9 @@ object Relational {
       unix_micros(col("ts").cast("timestamp")).as("us"))
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("us"), col("event_id"))
-    // > : an exactly-gap-sized interval MERGES — measured against the
-    // streaming session_window twin, whose merge bound is inclusive
-    // (an event at exactly prevEnd extends the session); the two forms
-    // agree on every input, ties included (StreamingSpec covers the
-    // exact-gap tie)
+    // > : an exactly-gap-sized interval MERGES — the inclusive merge
+    // bound of Spark's `session_window` (an event at exactly prevEnd
+    // extends the session); `Oracles.sessionize` breaks on the same `>`
     val withBreak = o.withColumn("brk",
       when(lag(col("us"), 1).over(w).isNull ||
         col("us") - lag(col("us"), 1).over(w) > gapUs, 1)
@@ -397,10 +368,9 @@ object Relational {
   val AttribWindowUs = 6L * HourUs
 
   /** Batch attribution join — each click matched to the same user's
-    * impressions in the preceding [[AttribWindowUs]] window: the BATCH
-    * twin of [[graft.streaming.StreamOps.attributionJoin]] (StreamingSpec
-    * asserts stream ≡ batch), and the interval-join shape ad pipelines
-    * run at 100 TB. The naive `click ∈ [imp, imp+W]` predicate is
+    * impressions in the preceding [[AttribWindowUs]] window (oracle
+    * query `q24_attribution` gates it), and the interval-join shape ad
+    * pipelines run at 100 TB. The naive `click ∈ [imp, imp+W]` predicate is
     * non-equi — Spark plans a per-user nested loop, quadratic on hot
     * users. Scale form (the [[rangeJoin]] bucketize pattern): bucket
     * time at the window grain, explode each IMPRESSION into its two
@@ -451,61 +421,8 @@ object Relational {
       .na.fill(0L)
       .orderBy(col("user_id"))
 
-  /** Skew-safe [[sessionizeOf]]: identical output, but no window ever
-    * partitions by user alone — a bot account with 10^9 events would
-    * drag its whole timeline through ONE task in the plain form. Events
-    * chunk by a fixed time grain (chunkUs > gapUs, so sessions cannot
-    * jump a whole empty chunk), sessionize WITHIN (user, chunk), then
-    * stitch at chunk boundaries: a per-(user, chunk) summary frame
-    * (metadata-scale — active user-chunks, not events) decides with one
-    * lag whether each chunk's first session continues the previous
-    * chunk's last (boundary gap ≤ gapUs), and an exclusive cumsum of
-    * (sessions − merges) renumbers locals to the global ids — which
-    * come out IDENTICAL to the single-window numbering, not merely
-    * isomorphic. The per-user serial step sees only chunk summaries;
-    * doc rows pass only (user, chunk)-partitioned windows.
-    */
-  def sessionizeSkewSafe(events: DataFrame, gapUs: Long,
-      chunkUs: Long): DataFrame = {
-    require(chunkUs > gapUs,
-      "chunk must exceed the gap or sessions could span an empty chunk")
-    val o = events.select(col("user_id"), col("event_id"), col("value"),
-      unix_micros(col("ts").cast("timestamp")).as("us"))
-      .withColumn("chunk", floor(col("us") / lit(chunkUs)))
-    val wc = Window.partitionBy(col("user_id"), col("chunk"))
-      .orderBy(col("us"), col("event_id"))
-    val local = o.withColumn("brk",
-        when(lag(col("us"), 1).over(wc).isNull ||
-          col("us") - lag(col("us"), 1).over(wc) > gapUs, 1)
-          .otherwise(0))
-      .withColumn("local_sid", sum(col("brk")).over(
-        wc.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val stats = local.groupBy(col("user_id"), col("chunk"))
-      .agg(max(col("local_sid")).as("n_sessions"),
-        min(col("us")).as("first_us"), max(col("us")).as("last_us"))
-    val wu = Window.partitionBy(col("user_id")).orderBy(col("chunk"))
-    // non-adjacent active chunks never merge: the boundary gap spans at
-    // least one whole empty chunk > gapUs, so the us-difference test
-    // alone is sufficient (null lag → otherwise(0))
-    val merged = stats.withColumn("m",
-      when(col("first_us") - lag(col("last_us"), 1).over(wu) <= gapUs,
-        1L).otherwise(0L))
-    val offsets = merged.withColumn("offset",
-      coalesce(sum(col("n_sessions") - col("m")).over(
-        wu.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("user_id"), col("chunk"), col("m"), col("offset"))
-    local.join(offsets, Seq("user_id", "chunk"))
-      .withColumn("session_id",
-        (col("offset") + col("local_sid") - col("m")).cast("int"))
-      .groupBy(col("user_id"), col("session_id"))
-      .agg(count(lit(1)).cast("int").as("n_events"),
-        (max(col("us")) - min(col("us"))).as("duration_us"),
-        round(sum(col("value")), 4).as("total_value"))
-      .orderBy(col("user_id"), col("session_id"))
-  }
-
-  /** Time-bucketed aggregation on the events table — the batch equivalent
-    * of the streaming tumbling-window query in [[graft.streaming]].
+  /** Time-bucketed aggregation on the events table: hourly tumbling
+    * windows per event type.
     */
   def eventsHourly(s: SparkSession, dir: String): DataFrame =
     Tables.events(s, dir)

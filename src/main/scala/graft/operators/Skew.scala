@@ -1,13 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew mitigation (north rule: "skew on hot media_ref keys handled with
   * salted repartitioning and AQE skew-join splitting"). AQE handles skew
-  * in sort-merge joins automatically (enabled in the session); these
-  * operators cover the aggregation path and the broadcast-free join path
-  * where a single hot key would pin one task.
+  * in sort-merge joins automatically (enabled in the session); salting
+  * covers the aggregation path, where a single hot key would pin one task.
   */
 object Skew {
 
@@ -23,19 +22,4 @@ object Skew {
       .agg(count(lit(1)).as("partial"))
       .groupBy(col(key))
       .agg(sum(col("partial")).as("cnt"))
-
-  /** Salted fact-to-dim join without broadcast: the dim side is exploded
-    * `salts`× so each (key, salt) bucket of the fact side finds its match;
-    * a hot fact key spreads over `salts` tasks. Use when the dim is too
-    * big to broadcast but far smaller than the facts.
-    */
-  def saltedJoin(facts: DataFrame, dim: DataFrame, key: String,
-      salts: Int): DataFrame = {
-    val saltedFacts = facts.withColumn("__salt",
-      pmod(xxhash64(monotonically_increasing_id()), lit(salts)))
-    val saltedDim = dim
-      .withColumn("__salt", explode(sequence(lit(0), lit(salts - 1))))
-      .withColumn("__salt", col("__salt").cast("long"))
-    saltedFacts.join(saltedDim, Seq(key, "__salt")).drop("__salt")
-  }
 }

@@ -8,12 +8,12 @@ import org.apache.spark.sql.functions._
   *
   * The reference delegates keyword evaluation to NetworkNT
   * (`schema.validate(...)`, YamlSchemaValidator.java:138-140); here each
-  * keyword from the exercised surface (SURVEY.md §2.3 — type, enum,
-  * required, pattern, minimum/maximum, minLength, items, contains, oneOf,
-  * not) compiles to a predicate over a span struct, and a failed keyword
-  * yields a violation struct `{pointer, keyword, message, schemaLocation}`
-  * mirroring the NetworkNT OutputUnit detail shape
-  * (testreport/invalidyaml.json:6-14).
+  * span keyword (`enum`, `required`, `pattern`, `minimum`/`maximum`,
+  * `minLength`) compiles to a predicate over a span struct, and a failed
+  * keyword yields a violation struct `{pointer, keyword, message,
+  * schemaLocation}` mirroring the NetworkNT OutputUnit detail shape
+  * (testreport/invalidyaml.json:6-14). The CLI's full keyword surface
+  * (`type`, `not`, `oneOf`, `contains`, ...) is [[JsonSchemaCompiler]].
   */
 sealed trait SpanRule {
   def field: String
@@ -97,104 +97,7 @@ final case class MinLengthRule(field: String, minLen: Int) extends SpanRule {
     lit(s"must be at least $minLen characters long")
 }
 
-/** `type` — dynamic JSON-type check of a string-encoded value, reproducing
-  * NetworkNT's "<actual> found, <expected> expected" phrasing
-  * (testreport/invalidyaml.txt:6 — "integer found, boolean expected").
-  */
-final case class TypeRule(field: String, expected: String) extends SpanRule {
-  val keyword = "type"
-  def violated(span: Column, i1: Column): Column = {
-    val v = span.getField(field)
-    v.isNotNull && RuleCompiler.jsonTypeOf(v) =!= expected
-  }
-  def message(span: Column, i1: Column): Column =
-    format_string("%s found, " + expected + " expected",
-      RuleCompiler.jsonTypeOf(span.getField(field)))
-}
-
-/** `not` — negation of an inner rule (sample-schema.json:1442-1444). */
-final case class NotRule(inner: SpanRule) extends SpanRule {
-  val field: String = inner.field
-  val keyword = "not"
-  def violated(span: Column, i1: Column): Column =
-    // violated iff the inner rule is satisfied
-    !coalesce(inner.violated(span, i1), lit(false))
-  def message(span: Column, i1: Column): Column =
-    lit("must not be valid against the schema")
-}
-
-/** `oneOf` — exactly one branch must hold (sample-schema.json:29-38).
-  * Branches are predicates over the span; Kleene nulls coalesce to false
-  * so the sum is always defined (SURVEY.md §7.3).
-  */
-final case class OneOfRule(field: String,
-    branches: Seq[Column => Column]) extends SpanRule {
-  val keyword = "oneOf"
-  def violated(span: Column, i1: Column): Column = {
-    val matches = branches
-      .map(b => coalesce(b(span), lit(false)).cast("int"))
-      .reduce(_ + _)
-    matches =!= 1
-  }
-  def message(span: Column, i1: Column): Column =
-    lit("must be valid against exactly one schema")
-}
-
-object DocRules {
-  /** Doc-level `contains` (sample-schema.json:1310-1312): the spans array
-    * must contain at least one element satisfying the predicate.
-    */
-  def containsViolation(spans: Column, pred: Column => Column,
-      desc: String): Column =
-    when(!coalesce(exists(spans, s => coalesce(pred(s), lit(false))),
-        lit(false)),
-      struct(
-        lit("/spans").as("pointer"),
-        lit("contains").as("keyword"),
-        lit(s"does not contain an element that matches: $desc")
-          .as("message"),
-        lit("#/properties/spans/contains").as("schemaLocation")))
-
-  /** Doc-level `minItems`/`maxItems` over the spans array. */
-  def sizeViolation(spans: Column, minItems: Int, maxItems: Int): Column =
-    when(size(spans) < minItems || size(spans) > maxItems,
-      struct(
-        lit("/spans").as("pointer"),
-        when(size(spans) < minItems, "minItems").otherwise("maxItems")
-          .as("keyword"),
-        when(size(spans) < minItems,
-          lit(s"must have at least $minItems items"))
-          .otherwise(lit(s"must have at most $maxItems items"))
-          .as("message"),
-        lit("#/properties/spans/items").as("schemaLocation")))
-
-  /** `additionalProperties` over a MapType column (map-shape objects,
-    * sample-schema.json:1286,1641-1643): every key must match the
-    * allowed pattern.
-    */
-  def additionalPropertiesViolation(m: Column, keyPattern: String): Column =
-    when(size(filter(map_keys(m), k => !k.rlike(keyPattern))) > 0,
-      struct(
-        lit("/props").as("pointer"),
-        lit("additionalProperties").as("keyword"),
-        concat(lit("property "),
-          element_at(filter(map_keys(m), k => !k.rlike(keyPattern)), 1),
-          lit(" is not allowed")).as("message"),
-        lit("#/properties/props/additionalProperties").as("schemaLocation")))
-}
-
 object RuleCompiler {
-  /** JSON type classification of a string-encoded scalar — the dynamic
-    * `typeof` the fixed Spark schema doesn't need for schema'd columns but
-    * the reference's dynamic documents do (SURVEY.md §2.3 `type`).
-    */
-  def jsonTypeOf(v: Column): Column =
-    when(v.isNull, "null")
-      .when(v.rlike("^-?[0-9]+$"), "integer")
-      .when(v.rlike("^-?[0-9]+\\.[0-9]+([eE][+-]?[0-9]+)?$"), "number")
-      .when(v.isin("true", "false"), "boolean")
-      .otherwise("string")
-
   /** Compile a rule set into one Column producing
     * `array<struct<pointer, keyword, message, schemaLocation>>` of all
     * violations in the document's spans. One pass over the array, fully
@@ -230,7 +133,7 @@ object RuleCompiler {
     * reference's sample-schema.json carries 682 `type` + 131 `properties`
     * + dozens of enum/pattern/range keywords — SURVEY.md §2.3), so the
     * constraint-eval throughput measurement reflects a production keyword
-    * density, not a toy. Entirely within the compact fast-path surface.
+    * density, not a toy.
     */
   val benchRules: Seq[SpanRule] = docRules ++ Seq(
     EnumRule("kind", Seq("text", "image", "audio", "video", "table")),

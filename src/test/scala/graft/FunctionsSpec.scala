@@ -76,61 +76,6 @@ class FunctionsSpec extends SparkSpec {
     assert(salted === plain)
   }
 
-  test("salted join equals plain join on skewed keys") {
-    val facts = (1 to 5000).map { i =>
-      (if (i % 10 < 3) "mHOT" else s"m${i % 50}", i.toLong)
-    }.toDF("media_ref", "v")
-    val dim = (Seq("mHOT") ++ (0 until 50).map(i => s"m$i"))
-      .map(r => (r, s"kind-$r")).toDF("media_ref", "kind")
-    val plain = facts.join(dim, Seq("media_ref"))
-      .agg(count(lit(1)), sum(col("v"))).as[(Long, Long)].head()
-    val salted = Skew.saltedJoin(facts, dim, "media_ref", 8)
-      .agg(count(lit(1)), sum(col("v"))).as[(Long, Long)].head()
-    assert(salted === plain)
-  }
-
-  test("oneOf / not / contains / minItems / additionalProperties keywords") {
-    // oneOf: span must be text-with-text or image-with-ref, exactly one
-    val oneOf = OneOfRule("kind", Seq(
-      sp => sp.getField("kind") === "text" && sp.getField("text").isNotNull,
-      sp => sp.getField("kind") === "image" &&
-        sp.getField("media_ref").isNotNull))
-    val spans = Seq(
-      graft.model.Span("text", "ok", null, 0),    // exactly one → ok
-      graft.model.Span("image", null, null, 1))   // zero branches → violated
-    val df = spark.createDataFrame(Seq(graft.model.Doc("d", spans, "p")))
-    val v1 = df.select(explode(RuleCompiler.violations(col("spans"),
-        Seq(oneOf))).as("v"))
-      .select($"v.pointer", $"v.keyword").as[(String, String)].collect()
-    assert(v1.toSeq === Seq(("/spans/1/kind", "oneOf")))
-
-    // not: offset must NOT be 0 → first span violates
-    val notRule = NotRule(RangeRule("offset", None, Some(0)))
-    val v2 = df.select(explode(RuleCompiler.violations(col("spans"),
-        Seq(notRule))).as("v"))
-      .select($"v.pointer").as[String].collect()
-    assert(v2.toSeq === Seq("/spans/0/offset"))
-
-    // contains: must contain an audio span → violated
-    val c = df.select(DocRules.containsViolation(col("spans"),
-      sp => sp.getField("kind") === "audio", "kind == audio").as("v"))
-      .select($"v.keyword").as[String].collect()
-    assert(c.toSeq === Seq("contains"))
-
-    // minItems
-    val sz = df.select(DocRules.sizeViolation(col("spans"), 3, 10).as("v"))
-      .select($"v.keyword").as[String].collect()
-    assert(sz.toSeq === Seq("minItems"))
-
-    // additionalProperties over a map column
-    val m = Seq(Map("good_key" -> "1", "bad key!" -> "2")).toDF("props")
-    val ap = m.select(DocRules.additionalPropertiesViolation(col("props"),
-      "^[a-z_]+$").as("v")).select($"v.keyword", $"v.message")
-      .as[(String, String)].collect()
-    assert(ap.length === 1 && ap.head._1 === "additionalProperties")
-    assert(ap.head._2 === "property bad key! is not allowed")
-  }
-
   test("codegen MinHash/SimHash kernels ≡ HOF spec trees on real docs") {
     import graft.operators.Dedup
     val dir = "/root/testdata/sf0.001"

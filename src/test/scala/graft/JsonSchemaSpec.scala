@@ -203,6 +203,8 @@ class JsonSchemaSpec extends SparkSpec {
       ("/tags", "uniqueItems")))
     assert(v("empty").map(t => (t._1, t._2)).toSet === Set(
       ("/tags", "minItems"), ("/tags", "contains")))
+    assert(v("empty").find(_._2 == "contains").get._3 ===
+      "does not contain an element that matches the contains schema")
   }
 
   test("oneOf / anyOf / allOf / not / exclusive bounds / multipleOf") {
@@ -213,15 +215,20 @@ class JsonSchemaSpec extends SparkSpec {
         |"m":{"allOf":[{"minimum":0},{"maximum":10}]},
         |"x":{"not":{"const":"forbidden"}},
         |"e":{"type":"number","exclusiveMinimum":0,"exclusiveMaximum":1,
-        |  "multipleOf":0.25}}}""".stripMargin.replace("\n", "")
+        |  "multipleOf":0.25},
+        |"o":{"type":"object","properties":{"good_key":{}},
+        |  "additionalProperties":false}}}""".stripMargin.replace("\n", "")
     val v = violationsOf(schema,
       ("ok", """{"k":"a","n":5,"m":7,"x":"fine","e":0.75}"""),
-      ("bad", """{"k":"c","n":true,"m":11,"x":"forbidden","e":0.3}"""),
+      ("bad", """{"k":"c","n":true,"m":11,"x":"forbidden","e":0.3,
+        |"o":{"good_key":1,"bad key!":2}}""".stripMargin.replace("\n", "")),
       ("edge", """{"e":0}"""))
     assert(!v.contains("ok"))
     assert(v("bad").map(t => (t._1, t._2)).toSet === Set(
       ("/k", "oneOf"), ("/n", "anyOf"), ("/m", "allOf"), ("/x", "not"),
-      ("/e", "multipleOf")))
+      ("/e", "multipleOf"), ("/o/bad key!", "additionalProperties")))
+    assert(v("bad").find(_._2 == "additionalProperties").get._3 ===
+      "property 'bad key!' is not allowed")
     assert(v("edge").map(t => (t._1, t._2)) ===
       Seq(("/e", "exclusiveMinimum")))
   }

@@ -622,48 +622,6 @@ class PipelineSpec extends SparkSpec {
       Tables.documents(spark, "/root/testdata/sf0.01").count())
   }
 
-  test("sessionizeSkewSafe equals the plain single-window form — ids " +
-      "included — and stitches a session spanning many chunks") {
-    import graft.operators.Relational
-    val dir01 = "/root/testdata/sf0.01"
-    val events = Tables.events(spark, dir01)
-    val gap = Relational.SessionGapUs              // 6 h
-    val plain = Relational.sessionizeOf(events, gap)
-      .as[(Long, Int, Int, Long, Double)].collect().toSet
-    val safe = Relational.sessionizeSkewSafe(events, gap,
-        chunkUs = 4 * gap)
-      .as[(Long, Int, Int, Long, Double)].collect().toSet
-    assert(safe == plain, s"diff: ${safe.diff(plain).take(3)} / " +
-      s"${plain.diff(safe).take(3)}")
-    // a narrow chunk width exercises many boundary stitches; output
-    // must be invariant to the chunk choice
-    val narrow = Relational.sessionizeSkewSafe(events, gap,
-        chunkUs = gap + 1)
-      .as[(Long, Int, Int, Long, Double)].collect().toSet
-    assert(narrow == plain)
-    // synthetic: one user, an event every 3 h for 3 days — a single
-    // session that crosses every chunk boundary
-    def t(d: Int, h: Int) =
-      java.sql.Timestamp.valueOf(f"2024-01-0${d + 1} $h%02d:00:00")
-    val span = (0 until 24).map { i =>
-      (i.toLong, 7L, t(i * 3 / 24, (i * 3) % 24), 1.0)
-    }.toDF("event_id", "user_id", "ts", "value")
-    val one = Relational.sessionizeSkewSafe(span, gap, chunkUs = 4 * gap)
-      .as[(Long, Int, Int, Long, Double)].collect()
-    assert(one.length == 1 && one.head._3 == 24, one.mkString("; "))
-  }
-
-  test("windowTopKSkewSafe equals the plain per-key window top-k") {
-    import graft.operators.Relational
-    val dir01 = "/root/testdata/sf0.01"
-    val plain = Relational.windowTopK(spark, dir01)
-      .as[(Long, Long, Double, Int)].collect().toSet
-    val safe = Relational.windowTopKSkewSafe(spark, dir01)
-      .as[(Long, Long, Double, Int)].collect().toSet
-    assert(safe == plain && safe.nonEmpty,
-      s"diff ${safe.diff(plain).take(3)} / ${plain.diff(safe).take(3)}")
-  }
-
   test("packShards equals the sequential packer and is invariant to " +
       "the bucket width") {
     val dir01 = "/root/testdata/sf0.01"

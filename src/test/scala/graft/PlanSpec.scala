@@ -337,22 +337,6 @@ class PlanSpec extends SparkSpec {
       || p.contains("SortMergeJoin"), p)
   }
 
-  test("sessionizeSkewSafe: no doc-row window partitions by user " +
-      "alone; the per-user serial stitch sees only chunk summaries") {
-    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
-    val p = graft.operators.Relational.sessionizeSkewSafe(
-        Tables.events(spark, dir), 21600000000L, 4 * 21600000000L)
-      .queryExecution.optimizedPlan
-    val wins = p.collect { case w: LWindow => w }
-    assert(wins.nonEmpty && wins.forall(_.partitionSpec.nonEmpty),
-      wins.toString)
-    // user-only windows (the boundary-merge lag + offsets cumsum) may
-    // exist ONLY above the per-(user, chunk) aggregate
-    wins.filter(_.partitionSpec.size == 1).foreach { w =>
-      assert(aggGuarded(w.child), w.toString)
-    }
-  }
-
   test("sampleMix is a scan-speed filter: no shuffle, no join") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.SortExec

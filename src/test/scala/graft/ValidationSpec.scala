@@ -32,20 +32,6 @@ class ValidationSpec extends SparkSpec {
     assert(df.count() === 0)
   }
 
-  // --- invalid.yaml: type violation with NetworkNT message parity --------
-  test("type keyword reproduces 'integer found, boolean expected'") {
-    // invalid.yaml:13 `boolean-sample: 123` → golden message at
-    // testreport/invalidyaml.txt:6
-    val df = Seq(("doc1", "123"), ("doc2", "true")).toDF("doc_id", "value")
-    val rule = TypeRule("value", "boolean")
-    val spans = array(struct(col("value").as("value")))
-    val out = df.select(col("doc_id"),
-        explode(RuleCompiler.violations(spans, Seq(rule))).as("v"))
-      .select(col("doc_id"), col("v.keyword"), col("v.message"))
-      .as[(String, String, String)].collect().toSet
-    assert(out === Set(("doc1", "type", "integer found, boolean expected")))
-  }
-
   // --- multi3invalid.yaml: per-doc independent verdicts [T,F,T] ----------
   test("multi-doc verdict vector [T,F,T] (multi3invalid.yaml)") {
     val ref = docsDf(
@@ -72,6 +58,24 @@ class ValidationSpec extends SparkSpec {
     val m = SpanInvariant.mismatches(docs, ref)
       .select(size(col("violations"))).as[Int].head()
     assert(m === 1)
+  }
+
+  // --- the shared doc↔reference join ---------------------------------------
+  test("mismatches, verdicts and fullVerdicts emit the same doc_ids, " +
+      "one row each") {
+    val ref = docsDf(
+      Doc("a", cleanSpans, "p"), Doc("b", cleanSpans, "p"),
+      Doc("ref-only", cleanSpans, "p"))
+    val docs = docsDf(
+      Doc("a", cleanSpans, "p"), Doc("b", cleanSpans.take(2), "p"),
+      Doc("doc-only", cleanSpans, "p"))
+    def ids(df: DataFrame): Seq[String] =
+      df.select("doc_id").as[String].collect().toSeq.sorted
+    val m = ids(SpanInvariant.mismatches(docs, ref))
+    assert(m.contains("a") && m.contains("b") && !m.contains("ref-only"), m)
+    assert(m.distinct === m)
+    assert(ids(SpanInvariant.verdicts(docs, ref)) === m)
+    assert(ids(Validation.fullVerdicts(docs, ref)) === m)
   }
 
   // --- keyword checks ------------------------------------------------------
