@@ -13,9 +13,13 @@ object SpanInvariant {
     * evaluated with arrays_zip + higher-order functions — one codegen'd
     * projection after a doc_id-keyed join.
     *
-    * Scale: the join shuffles both sides on doc_id (sort-merge at 10^12
-    * rows); with both tables bucketed/partitioned by doc_id in Iceberg the
-    * shuffle is elided entirely. No other shuffle exists in this check.
+    * Scale: the join shuffles both sides on doc_id ([[withReference]]);
+    * with both tables bucketed by doc_id the shuffle is elided. When both
+    * are co-bucketed sorted file tables, [[verdicts]] and
+    * [[Validation.fullVerdicts]] replace the join with the bucket merge
+    * of [[ZipSortedBuckets]]: no hash map, no row copy of the scans, a
+    * few tasks of many buckets each. No other shuffle exists in this
+    * check.
     */
   /** The violations array for one doc given its spans and the reference
     * spans.
@@ -64,8 +68,11 @@ object SpanInvariant {
     * cardinality as the fact side, so the optimizer's broadcast choice
     * (driven by pre-explode size estimates) would build a huge broadcast,
     * and sort-merge pays an unneeded sort. With both tables bucketed by
-    * doc_id in Iceberg the shuffle is elided entirely
-    * (storage-partitioned join).
+    * doc_id the shuffle is elided (storage-partitioned join). The verdict
+    * counts ([[verdictCounts]]) use this join only when the inputs are not
+    * co-bucketed sorted file tables; for those the bucket merge of
+    * [[ZipSortedBuckets]] replaces it. The `mismatches` detail path
+    * always joins.
     */
   private[checks] def withReference(docs: DataFrame, ref: DataFrame)
       : DataFrame =
@@ -81,6 +88,18 @@ object SpanInvariant {
     withReference(docs, ref).select(col("doc_id"), col("part"),
       violationsColumnFast(col("spans"), col("ref_spans")).as("violations"))
 
+  /** `(doc_id, part, n_violations)` per doc with a reference row: the
+    * fused [[graft.functions.SpanVerdictCount]] kernel's mismatches plus
+    * `rules` violations, over the bucket merge when the inputs allow it
+    * ([[ZipSortedBuckets]]), else over [[withReference]].
+    */
+  private[checks] def verdictCounts(docs: DataFrame, ref: DataFrame,
+      rules: Seq[graft.rules.SpanRule]): DataFrame =
+    ZipSortedBuckets.verdictCounts(docs, ref, rules).getOrElse(
+      withReference(docs, ref).select(col("doc_id"), col("part"),
+        graft.functions.SpanVerdictCount.spanVerdictCount(
+          col("spans"), col("ref_spans"), rules).as("n_violations")))
+
   /** Per-doc verdicts: valid iff zero span mismatches. Counts via the
     * codegen'd [[graft.functions.SpanVerdictCount]] kernel with an empty
     * rule set — the violation structs the detail path builds (through
@@ -90,10 +109,7 @@ object SpanInvariant {
     * `size(violationsColumn)`, the HOF spec form).
     */
   def verdicts(docs: DataFrame, ref: DataFrame): DataFrame =
-    withReference(docs, ref)
-      .select(col("doc_id"), col("part"),
-        graft.functions.SpanVerdictCount.spanVerdictCount(
-          col("spans"), col("ref_spans"), Nil).as("n_violations"))
+    verdictCounts(docs, ref, Nil)
       .select(col("doc_id"), col("part"),
         (col("n_violations") === 0).as("valid"), col("n_violations"))
 }
@@ -134,15 +150,11 @@ object Validation {
     * docs/sec metric times.
     */
   def fullVerdicts(docs: DataFrame, ref: DataFrame): DataFrame =
-    SpanInvariant.withReference(docs, ref)
-      .select(col("doc_id"), col("part"),
-        // fused kernel: mismatch + rule counts in ONE pass over the
-        // span buffers (≡ size(SpanInvariant.violationsColumn) +
-        // size(RuleCompiler.violations), FunctionsSpec)
-        graft.functions.SpanVerdictCount.spanVerdictCount(
-          col("spans"), col("ref_spans"),
-          graft.rules.RuleCompiler.benchRules)
-          .as("n_violations"))
+    // fused kernel: mismatch + rule counts in ONE pass over the span
+    // buffers (≡ size(SpanInvariant.violationsColumn) +
+    // size(RuleCompiler.violations), FunctionsSpec)
+    SpanInvariant.verdictCounts(docs, ref,
+        graft.rules.RuleCompiler.benchRules)
       .withColumn("valid", col("n_violations") === 0)
 
   def perPartition(docs: DataFrame, ref: DataFrame): DataFrame =

@@ -336,17 +336,20 @@ final class VerdictCounter(ki: Int, ti: Int, mi: Int, oi: Int,
   private def strEq(x: UTF8String, y: UTF8String): Boolean =
     if (x == null) y == null else x.equals(y)
 
-  /** The hot entry: when both span buffers are UnsafeArrayData (the
-    * only runtime shape a codegen'd projection over parquet produces),
-    * walk them with TWO REUSED UnsafeRow cursors — `getStruct`
-    * allocates a fresh wrapper per call, which at 5M docs × 8 spans ×
-    * 2 sides was ~80M short-lived objects per flagship rep. The cursor
-    * `pointTo` uses the documented UnsafeArrayData element layout
-    * (8-byte offset&length slot per element after the header — the
-    * exact arithmetic of UnsafeArrayData.getStruct); any other input
-    * shape falls back to the unchanged generic walk, and FunctionsSpec
-    * pins fused ≡ HOF mismatches + HOF rule violations over the real
-    * corpus (which runs this path).
+  /** The hot entry: when both span buffers are UnsafeArrayData (what a
+    * codegen'd projection over parquet produces, and what the merge's
+    * copied rows hold), walk them with TWO REUSED UnsafeRow cursors —
+    * `getStruct` allocates a fresh wrapper per call, which at 5M docs ×
+    * 8 spans × 2 sides was ~80M short-lived objects per flagship rep.
+    * The cursor `pointTo` uses the documented UnsafeArrayData element
+    * layout (8-byte offset&length slot per element after the header —
+    * the exact arithmetic of UnsafeArrayData.getStruct); any other input
+    * shape falls back to the unchanged generic walk. The other shape in
+    * practice is the `ColumnarArray` pair that
+    * [[graft.checks.ZipSortedBucketsExec]] passes straight off the
+    * vectorized scan. FunctionsSpec pins fused ≡ HOF mismatches + HOF
+    * rule violations over the real corpus (the unsafe path), and
+    * ValidationSpec pins the merge against the join (the columnar path).
     */
   def count(a: ArrayData, b: ArrayData): Int = (a, b) match {
     case (ua: org.apache.spark.sql.catalyst.expressions.UnsafeArrayData,
@@ -411,6 +414,21 @@ final class VerdictCounter(ki: Int, ti: Int, mi: Int, oi: Int,
   }
 }
 
+object VerdictCounter {
+  /** The fused kernel for span arrays of type `spansType` (the docs
+    * side's; the reference side is read with the same field ordinals).
+    */
+  def apply(spansType: DataType, rules: Seq[CompactRule]): VerdictCounter = {
+    val (ki, ti, mi, oi) = SpanCompare.fieldOrdinals(spansType)
+    val st = spansType.asInstanceOf[ArrayType]
+      .elementType.asInstanceOf[StructType]
+    val ordinals = st.fieldNames.zipWithIndex.toMap
+    new VerdictCounter(ki, ti, mi, oi,
+      new RuleCounter(rules.toArray, ordinals, ordinals("kind"),
+        st.fields.map(_.dataType == StringType)))
+  }
+}
+
 case class SpanVerdictCount(left: Expression, right: Expression,
     rules: Seq[CompactRule])
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
@@ -418,15 +436,8 @@ case class SpanVerdictCount(left: Expression, right: Expression,
   override def dataType: DataType = IntegerType
   override def nullable: Boolean = left.nullable || right.nullable
 
-  @transient private lazy val counter: VerdictCounter = {
-    val (ki, ti, mi, oi) = SpanCompare.fieldOrdinals(left.dataType)
-    val st = left.dataType.asInstanceOf[ArrayType]
-      .elementType.asInstanceOf[StructType]
-    val ordinals = st.fieldNames.zipWithIndex.toMap
-    new VerdictCounter(ki, ti, mi, oi,
-      new RuleCounter(rules.toArray, ordinals, ordinals("kind"),
-        st.fields.map(_.dataType == StringType)))
-  }
+  @transient private lazy val counter: VerdictCounter =
+    VerdictCounter(left.dataType, rules)
 
   override def nullSafeEval(l: Any, r: Any): Any =
     Integer.valueOf(counter.count(

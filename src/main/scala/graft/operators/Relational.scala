@@ -284,12 +284,8 @@ object Relational {
     * the frame). Hot users are the standard skew story (AQE/salting by
     * day). Oracle query `q21_sessions` gates it.
     */
-  def sessionize(s: SparkSession, dir: String): DataFrame =
-    sessionizeOf(Tables.events(s, dir), SessionGapUs)
-
-  /** [[sessionize]] over any `(user_id, event_id, ts, value)` frame. */
-  def sessionizeOf(events: DataFrame, gapUs: Long): DataFrame = {
-    val o = events.select(col("user_id"), col("event_id"),
+  def sessionize(s: SparkSession, dir: String): DataFrame = {
+    val o = Tables.events(s, dir).select(col("user_id"), col("event_id"),
       col("value"),
       unix_micros(col("ts").cast("timestamp")).as("us"))
     val w = Window.partitionBy(col("user_id"))
@@ -299,7 +295,7 @@ object Relational {
     // extends the session); `Oracles.sessionize` breaks on the same `>`
     val withBreak = o.withColumn("brk",
       when(lag(col("us"), 1).over(w).isNull ||
-        col("us") - lag(col("us"), 1).over(w) > gapUs, 1)
+        col("us") - lag(col("us"), 1).over(w) > SessionGapUs, 1)
         .otherwise(0))
     withBreak
       .withColumn("session_id", sum(col("brk")).over(
@@ -381,11 +377,8 @@ object Relational {
     * click's bucket is unique), so no dedup pass is needed. All µs
     * integers; impressions = view events, clicks = click events.
     */
-  def attribution(s: SparkSession, dir: String): DataFrame =
-    attributionOf(Tables.events(s, dir))
-
-  /** [[attribution]] over any events frame. */
-  def attributionOf(e: DataFrame): DataFrame = {
+  def attribution(s: SparkSession, dir: String): DataFrame = {
+    val e = Tables.events(s, dir)
     val imp = e.filter(col("event_type") === "view")
       .select(col("user_id"), col("event_id").as("imp_id"),
         unix_micros(col("ts").cast("timestamp")).as("imp_us"))

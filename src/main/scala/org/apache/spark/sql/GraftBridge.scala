@@ -39,6 +39,17 @@ object GraftBridge {
       case _ => df
     }
 
+  /** A DataFrame over a hand-built logical plan (the co-bucketed merge
+    * node of [[graft.checks.ZipSortedBuckets]]).
+    */
+  def ofRows(spark: SparkSession, plan: catalyst.plans.logical.LogicalPlan)
+      : DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Spark's own parallelism default for scans (`private[sql]`). */
+  def leafNodeDefaultParallelism(spark: SparkSession): Int =
+    spark.asInstanceOf[classic.SparkSession].leafNodeDefaultParallelism
+
   /** Bounded (~100 ms) non-throwing read of an Observation's metrics —
     * `getOrEmpty` is private[sql]; the gate-count helper polls this
     * instead of blocking forever on `get` (ADVICE r5).

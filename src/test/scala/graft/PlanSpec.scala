@@ -70,6 +70,64 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("BroadcastHashJoin"), p)
   }
 
+  test("co-bucketed sorted inputs: perPartition merges buckets — no " +
+      "hash join, the only Exchange is the aggregate's") {
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
+    import graft.checks.{Validation, ZipSortedBucketsExec}
+    val documents = Tables.documents(spark, dir)
+    val tmp = java.nio.file.Files.createTempDirectory("graft-zip")
+    val docs = bucketedTable(Interleaved.docs(documents), "ps_zip_docs", 8,
+      tmp)
+    val ref = bucketedTable(Interleaved.referenceSpans(documents),
+      "ps_zip_ref", 8, tmp)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val df = Validation.perPartition(docs, ref)
+      val plan = df.queryExecution.executedPlan
+      val zips = plan.collect { case z: ZipSortedBucketsExec => z }
+      assert(zips.size === 1, plan)
+      assert(plan.collect { case j: ShuffledHashJoinExec => j }.isEmpty, plan)
+      val exchanges = plan.collect { case e: Exchange => e }
+      assert(exchanges.size === 1 &&
+        exchanges.head.toString.contains("hashpartitioning(part"), plan)
+      // the merge's SQL metrics say which path ran, with no extra pass
+      val docCount = df.collect().map(_.getAs[Long]("docs")).sum
+      assert(docCount === documents.count())
+      assert(zips.head.metrics("numMergedBuckets").value === 8)
+      assert(zips.head.metrics("numOutputRows").value === docCount)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
+  test("two files in one bucket: perPartition falls back to the " +
+      "ShuffledHashJoin, same answers") {
+    import graft.checks.Validation
+    val documents = Tables.documents(spark, dir)
+    val tmp = java.nio.file.Files.createTempDirectory("graft-zip2")
+    val half = col("idnum") % 2 === 0
+    val (d, r) = (Interleaved.docs(documents),
+      Interleaved.referenceSpans(documents))
+    bucketedTable(d.filter(half), "ps_zip2_docs", 8, tmp)
+    bucketedTable(r.filter(half), "ps_zip2_ref", 8, tmp)
+    assert(physical(Validation.perPartition(spark.table("ps_zip2_docs"),
+      spark.table("ps_zip2_ref"))).contains("ZipSortedBuckets"))
+    // a second bucketed append: two files in (at least) one bucket
+    val docs = bucketedTable(d.filter(!half), "ps_zip2_docs", 8, tmp,
+      "append")
+    val ref = bucketedTable(r.filter(!half), "ps_zip2_ref", 8, tmp,
+      "append")
+    val p = physical(Validation.perPartition(docs, ref))
+    assert(p.contains("ShuffledHashJoin") && !p.contains("ZipSortedBuckets"),
+      p)
+    val plain = Validation.perPartition(
+      spark.read.parquet(tmp.resolve("ps_zip2_docs").toString),
+      spark.read.parquet(tmp.resolve("ps_zip2_ref").toString))
+    assert(Validation.perPartition(docs, ref).collect().toSet ===
+      plain.collect().toSet)
+    assert(plain.collect().map(_.getAs[Long]("docs")).sum ===
+      documents.count())
+  }
+
   test("scalar plans codegen; HOF projections fall back (documented)") {
     // simple scalar/aggregate plans stay inside whole-stage codegen
     val agg = Tables.lineitem(spark, dir).groupBy(col("l_returnflag"))

@@ -78,6 +78,111 @@ class ValidationSpec extends SparkSpec {
     assert(ids(Validation.fullVerdicts(docs, ref)) === m)
   }
 
+  // --- the co-bucketed merge (ZipSortedBuckets) ≡ the join ----------------
+  private lazy val mergeDir =
+    java.nio.file.Files.createTempDirectory("graft-merge")
+
+  private def verdictRows(df: DataFrame): Seq[String] =
+    df.select("doc_id", "part", "n_violations").collect()
+      .map(_.toString).toSeq.sorted
+
+  test("bucket merge ≡ the join over an edge corpus (fullVerdicts, " +
+      "verdicts), NULLs included") {
+    val buckets = 8
+    val bucketOf = pmod(hash(col("doc_id")), lit(buckets))
+    val cols = Seq("doc_id", "spans", "part").map(col)
+    val bad = cleanSpans.updated(0, Span("text", "junk", null, 0))
+    val edgeDocs = docsDf(Seq(
+      Doc("dup", cleanSpans, "e"), Doc("dup", bad, "e2"),
+      Doc(null, cleanSpans, "e"),
+      Doc("null-doc-spans", null, "e"), Doc("null-ref-spans", cleanSpans, "e"),
+      Doc("len", cleanSpans.take(2), "e")) ++
+      (0 until 8).map(i => Doc(s"doc-only-$i", cleanSpans, "e")): _*)
+    val edgeRef = docsDf(Seq(
+      Doc("dup", cleanSpans, "e"), Doc("dup", cleanSpans.take(1), "e"),
+      Doc(null, cleanSpans, "e"),
+      Doc("null-doc-spans", cleanSpans, "e"), Doc("null-ref-spans", null, "e"),
+      Doc("len", cleanSpans, "e")) ++
+      (0 until 8).map(i => Doc(s"ref-only-$i", cleanSpans, "e")): _*)
+    // a documents table in the fixture layout; ids 1-399 hold every
+    // injection class of Interleaved (idnum % 97 in {3, 10, 20, 30})
+    val documents = spark.range(1, 400).select(col("id").as("doc_id"),
+      lit("alpha beta gamma delta epsilon zeta eta theta").as("text"),
+      concat(lit("s"), (col("id") % 3).cast("string")).as("source"))
+    // two buckets that hold none of the paired edge keys: `noRef` keeps
+    // docs but loses its reference rows, `noDocs` the reverse
+    val paired = Seq(Some("dup"), None, Some("null-doc-spans"),
+      Some("null-ref-spans"), Some("len")).toDF("doc_id")
+      .select(bucketOf).as[Int].collect().toSet
+    val Seq(noRef, noDocs) = (0 until buckets).filterNot(paired).take(2)
+    val docs = bucketedTable(edgeDocs.select(cols: _*)
+      .unionByName(Interleaved.docs(documents).select(cols: _*))
+      .filter(bucketOf =!= noDocs), "vs_merge_docs", buckets, mergeDir)
+    val ref = bucketedTable(edgeRef.select(cols: _*)
+      .unionByName(Interleaved.referenceSpans(documents).select(cols: _*))
+      .filter(bucketOf =!= noRef), "vs_merge_ref", buckets, mergeDir)
+    def bucketIds(table: String): Set[Int] =
+      java.nio.file.Files.list(mergeDir.resolve(table)).toArray.toSeq
+        .flatMap(f => org.apache.spark.sql.execution.datasources
+          .BucketingUtils.getBucketId(f.toString.split('/').last)).toSet
+    assert(bucketIds("vs_merge_docs").contains(noRef) &&
+      !bucketIds("vs_merge_ref").contains(noRef))
+    assert(bucketIds("vs_merge_ref").contains(noDocs) &&
+      !bucketIds("vs_merge_docs").contains(noDocs))
+    // the same files read unbucketed take today's join
+    val plainDocs = spark.read.parquet(mergeDir.resolve("vs_merge_docs")
+      .toString)
+    val plainRef = spark.read.parquet(mergeDir.resolve("vs_merge_ref")
+      .toString)
+    val checks = Seq[(String, (DataFrame, DataFrame) => DataFrame)](
+      "fullVerdicts" -> Validation.fullVerdicts,
+      "verdicts" -> SpanInvariant.verdicts)
+    for ((name, check) <- checks) {
+      val merged = check(docs, ref)
+      val joined = check(plainDocs, plainRef)
+      val mergedPlan = merged.queryExecution.executedPlan.toString
+      assert(mergedPlan.contains("ZipSortedBuckets"), mergedPlan)
+      assert(!joined.queryExecution.executedPlan.toString
+        .contains("ZipSortedBuckets"))
+      val rows = verdictRows(merged)
+      assert(rows === verdictRows(joined), name)
+      // the corpus reaches every edge: a 2x2 cross product, NULL counts,
+      // no null key, a length mismatch, the injected classes
+      assert(rows.count(_.startsWith("[dup,")) === 4, name)
+      assert(rows.filter(_.startsWith("[null-")).forall(_.endsWith(",null]")))
+      assert(rows.count(_.startsWith("[null-")) === 2, name)
+      assert(!rows.exists(_.startsWith("[null,")), name)
+      assert(!rows.exists(r => r.contains("-only-")), name)
+      assert(rows.exists(_.startsWith("[len,e,")) &&
+        !rows.contains("[len,e,0]"), name)
+      assert(merged.filter(col("doc_id").rlike("^d[0-9]+$") &&
+        col("n_violations") > 0).count() > 0, name)
+    }
+  }
+
+  test("bucket merge fails, naming table and bucket, when SORTED BY " +
+      "files are not sorted") {
+    val path = mergeDir.resolve("vs_unsorted")
+    // written bucketed but NOT sorted, keys descending within each bucket
+    docsDf((0 until 40).reverse.map(i => Doc(f"k$i%02d", cleanSpans, "p")): _*)
+      .coalesce(1).write.bucketBy(4, "doc_id").option("path", path.toString)
+      .saveAsTable("vs_unsorted_w")
+    Seq("vs_unsorted_docs", "vs_unsorted_ref").foreach(t => spark.sql(
+      s"""CREATE TABLE $t (doc_id STRING,
+         |  spans ARRAY<STRUCT<kind: STRING, text: STRING,
+         |    media_ref: STRING, offset: INT>>, part STRING)
+         |USING PARQUET CLUSTERED BY (doc_id) SORTED BY (doc_id)
+         |INTO 4 BUCKETS LOCATION '$path'""".stripMargin))
+    val e = intercept[Exception](Validation.fullVerdicts(
+      spark.table("vs_unsorted_docs"), spark.table("vs_unsorted_ref"))
+      .collect())
+    val msg = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(_.toString).mkString("\n")
+    assert(msg.contains("IllegalStateException"), msg)
+    assert(msg.matches("(?s).*bucket \\d+ is not sorted by doc_id.*"), msg)
+    assert(msg.contains(path.toString), msg)
+  }
+
   // --- keyword checks ------------------------------------------------------
   test("enum, required, pattern, minimum, maximum keywords") {
     val spans = Seq(
