@@ -34,32 +34,31 @@ object SpanInvariant {
           a.getField("text") <=> b.getField("text") &&
           a.getField("media_ref") <=> b.getField("media_ref") &&
           a.getField("offset") <=> b.getField("offset"))
-        when(a.isNull || b.isNull || mismatch, struct(
-          concat(lit("/spans/"), i.cast("string")).as("pointer"),
-          lit("spanSequence").as("keyword"),
-          lit("span does not equal reference (kind, text, media_ref, order)")
-            .as("message"),
-          lit("#/properties/spans/spanSequence").as("schemaLocation")))
+        when(a.isNull || b.isNull || mismatch, spanSequenceViolation(i))
       }),
       v => v.isNotNull)
   }
 
+  /** The `spanSequence` violation struct for span index `i`. */
+  private def spanSequenceViolation(i: Column): Column = struct(
+    concat(lit("/spans/"), i.cast("string")).as("pointer"),
+    lit("spanSequence").as("keyword"),
+    lit("span does not equal reference (kind, text, media_ref, order)")
+      .as("message"),
+    lit("#/properties/spans/spanSequence").as("schemaLocation"))
+
   /** Fast path: violations via the custom [[graft.functions
-    * .SpanMismatchIndices]] expression — one tight loop over the two span
-    * buffers instead of an interpreted HOF tree; violation structs are
-    * built only for the (rare) mismatch indices. Semantically identical
-    * to [[violationsColumn]] (equivalence is spec-tested).
+    * .SpanMismatchIndices]] expression — the fused kernel's compare over
+    * the two span buffers instead of an interpreted HOF tree; violation
+    * structs are built only for the (rare) mismatch indices. Equal to
+    * [[violationsColumn]] except on a null element on both sides (no
+    * violation here; FunctionsSpec pins the rest).
     */
   def violationsColumnFast(spans: Column, refSpans: Column): Column =
     transform(
       graft.functions.SpanMismatchIndices
         .spanMismatchIndices(spans, refSpans),
-      i => struct(
-        concat(lit("/spans/"), i.cast("string")).as("pointer"),
-        lit("spanSequence").as("keyword"),
-        lit("span does not equal reference (kind, text, media_ref, order)")
-          .as("message"),
-        lit("#/properties/spans/spanSequence").as("schemaLocation")))
+      i => spanSequenceViolation(i))
 
   /** The one doc↔reference join of every span check: an inner join on
     * doc_id that adds the reference's spans as `ref_spans`.

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructFiel
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.functions.{CompactRule, VerdictCounter}
+import graft.functions.VerdictCounter
 import graft.rules.SpanRule
 
 /** The doc↔reference verdict join for co-bucketed, sorted tables: bucket
@@ -69,8 +69,7 @@ object ZipSortedBuckets {
       val nViolations = AttributeReference("n_violations", IntegerType)()
       GraftBridge.ofRows(spark, ZipSortedBuckets(d.plan, r.plan,
         d.cols(0), d.cols(1), d.cols(2), r.cols(0), r.cols(1), nViolations,
-        CompactRule.from(rules), d.buckets, tasks(spark, d.buckets),
-        d.path, r.path))
+        rules, d.buckets, tasks(spark, d.buckets), d.path, r.path))
     }
   }
 
@@ -139,7 +138,7 @@ object ZipSortedBuckets {
 final case class ZipSortedBuckets(docs: LogicalPlan, ref: LogicalPlan,
     docId: Attribute, part: Attribute, spans: Attribute,
     refId: Attribute, refSpans: Attribute, nViolations: Attribute,
-    rules: Seq[CompactRule], buckets: Int, tasks: Int,
+    rules: Seq[SpanRule], buckets: Int, tasks: Int,
     docsPath: String, refPath: String) extends BinaryNode {
   override def left: LogicalPlan = docs
   override def right: LogicalPlan = ref
@@ -191,7 +190,7 @@ final case class BucketBatchesExec(child: SparkPlan) extends UnaryExecNode
 final case class ZipSortedBucketsExec(docs: SparkPlan, ref: SparkPlan,
     docId: Attribute, part: Attribute, spans: Attribute,
     refId: Attribute, refSpans: Attribute, nViolations: Attribute,
-    rules: Seq[CompactRule], buckets: Int, tasks: Int,
+    rules: Seq[SpanRule], buckets: Int, tasks: Int,
     docsPath: String, refPath: String) extends BinaryExecNode {
   override def left: SparkPlan = docs
   override def right: SparkPlan = ref

@@ -11,42 +11,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.rules.{EnumRule, PatternRule, RangeRule, RequiredRule, SpanRule}
-
-/** Compact, driver-compiled form of a span rule, evaluated in a tight
-  * loop by [[SpanVerdictCount]]: one case per [[graft.rules.SpanRule]]
-  * keyword.
-  */
-sealed trait CompactRule extends Serializable
-final case class EnumC(field: String, allowed: Set[String])
-    extends CompactRule {
-  @transient lazy val allowedU: Set[UTF8String] =
-    allowed.map(UTF8String.fromString)
-}
-final case class RequiredC(field: String, whenKind: Option[String])
-    extends CompactRule {
-  @transient lazy val whenKindU: Option[UTF8String] =
-    whenKind.map(UTF8String.fromString)
-}
-final case class PatternC(field: String, regex: String) extends CompactRule {
-  @transient lazy val pattern: Pattern = Pattern.compile(regex)
-}
-final case class RangeC(field: String, min: Option[Long], max: Option[Long])
-    extends CompactRule
-final case class MinLengthC(field: String, minLen: Int) extends CompactRule
-
-object CompactRule {
-  /** Compile ADT rules to their compact form (`SpanRule` is sealed, so
-    * the match is exhaustive).
-    */
-  def from(rules: Seq[SpanRule]): Seq[CompactRule] = rules.map {
-    case EnumRule(f, allowed) => EnumC(f, allowed.toSet)
-    case RequiredRule(f, whenKind) => RequiredC(f, whenKind)
-    case PatternRule(f, re) => PatternC(f, re)
-    case RangeRule(f, min, max) => RangeC(f, min, max)
-    case graft.rules.MinLengthRule(f, m) => MinLengthC(f, m)
-  }
-}
+import graft.rules.{EnumRule, MinLengthRule, PatternRule, RangeRule, RequiredRule, SpanRule}
 
 /** Hand-specialized byte/code-point matchers for the pattern keywords
   * the flagship rule set uses. Each is `find()`-equivalent to its
@@ -193,10 +158,11 @@ private[functions] object FastPatterns {
   }
 }
 
-/** Serializable rule evaluator of the fused kernel [[VerdictCounter]];
-  * field ordinals resolved once at construction.
+/** Serializable rule evaluator of the fused kernel [[VerdictCounter]],
+  * built straight from the [[SpanRule]] ADT (sealed, so every match here
+  * is exhaustive); field ordinals resolved once at construction.
   */
-final class RuleCounter(rules: Array[CompactRule],
+final class RuleCounter(rules: Array[SpanRule],
     ordinals: Map[String, Int], kindOrd: Int,
     stringField: Array[Boolean]) extends Serializable {
   // per-rule dispatch tables resolved once: no Map lookups, no Option
@@ -204,42 +170,43 @@ final class RuleCounter(rules: Array[CompactRule],
   private val TEnum = 0; private val TReq = 1
   private val TPat = 2; private val TRange = 3; private val TLen = 4
   private val tags: Array[Int] = rules.map {
-    case _: EnumC => TEnum
-    case _: RequiredC => TReq
-    case _: PatternC => TPat
-    case _: RangeC => TRange
-    case _: MinLengthC => TLen
+    case _: EnumRule => TEnum
+    case _: RequiredRule => TReq
+    case _: PatternRule => TPat
+    case _: RangeRule => TRange
+    case _: MinLengthRule => TLen
   }
-  private def fieldOf(r: CompactRule): String = r match {
-    case EnumC(f, _) => f
-    case RequiredC(f, _) => f
-    case PatternC(f, _) => f
-    case RangeC(f, _, _) => f
-    case MinLengthC(f, _) => f
-  }
-  private val ords: Array[Int] = rules.map(r => ordinals(fieldOf(r)))
+  private val ords: Array[Int] = rules.map(r => ordinals(r.field))
+  // UTF8String sets and compiled Patterns are rebuilt on each executor
   @transient private lazy val enumSets: Array[Set[UTF8String]] =
-    rules.map { case e: EnumC => e.allowedU; case _ => null }
+    rules.map {
+      case EnumRule(_, allowed) => allowed.map(UTF8String.fromString).toSet
+      case _ => null
+    }
   @transient private lazy val reqKinds: Array[UTF8String] =
-    rules.map { case r: RequiredC => r.whenKindU.orNull; case _ => null }
+    rules.map {
+      case RequiredRule(_, whenKind) =>
+        whenKind.map(UTF8String.fromString).orNull
+      case _ => null
+    }
   @transient private lazy val patterns: Array[Pattern] =
-    rules.map { case p: PatternC => p.pattern; case _ => null }
+    rules.map { case PatternRule(_, re) => Pattern.compile(re); case _ => null }
   // specialized matcher id per pattern rule (Generic = fall back to
   // java.util.regex); resolved once from the regex source string
   private val patKinds: Array[Int] = rules.map {
-    case p: PatternC => FastPatterns.kindOf(p.regex)
+    case PatternRule(_, re) => FastPatterns.kindOf(re)
     case _ => FastPatterns.Generic
   }
   private val hasMin: Array[Boolean] =
-    rules.map { case RangeC(_, min, _) => min.isDefined; case _ => false }
+    rules.map { case RangeRule(_, min, _) => min.isDefined; case _ => false }
   private val mins: Array[Long] =
-    rules.map { case RangeC(_, min, _) => min.getOrElse(0L); case _ => 0L }
+    rules.map { case RangeRule(_, min, _) => min.getOrElse(0L); case _ => 0L }
   private val hasMax: Array[Boolean] =
-    rules.map { case RangeC(_, _, max) => max.isDefined; case _ => false }
+    rules.map { case RangeRule(_, _, max) => max.isDefined; case _ => false }
   private val maxs: Array[Long] =
-    rules.map { case RangeC(_, _, max) => max.getOrElse(0L); case _ => 0L }
+    rules.map { case RangeRule(_, _, max) => max.getOrElse(0L); case _ => 0L }
   private val minLens: Array[Int] =
-    rules.map { case MinLengthC(_, m) => m; case _ => 0 }
+    rules.map { case MinLengthRule(_, m) => m; case _ => 0 }
 
   /** Violations of ONE span row — the inner loop of the fused
     * flagship kernel [[SpanVerdictCount]] for a span with no reference
@@ -249,7 +216,7 @@ final class RuleCounter(rules: Array[CompactRule],
     * allocated a fresh UTF8String wrapper per rule per span (≈25 per
     * span under the 20-keyword flagship set).
     */
-  def countSpan(row: org.apache.spark.sql.catalyst.InternalRow): Int = {
+  def countSpan(row: InternalRow): Int = {
     // fetch-once locals for the 4-field span struct (null SQL values
     // stay null / flagged)
     var u0: UTF8String = null; var u1: UTF8String = null
@@ -322,115 +289,106 @@ final class RuleCounter(rules: Array[CompactRule],
 }
 
 /** FUSED verdict kernel: span-sequence mismatches PLUS rule violations
-  * in ONE loop over the two span buffers, the only counting kernel for
-  * spans. A mismatch kernel plus a separate rule-count kernel would walk
-  * the docs-side span array twice (two codegen round-trips, two
-  * bounds/null scans, two getStruct decodes per span); the fusion walks
-  * it once. It equals `size(SpanInvariant.violationsColumn)` plus
-  * `size(RuleCompiler.violations)`, the two HOF spec forms (FunctionsSpec
-  * on the fixture join); with an empty rule set it is the mismatch count
-  * alone ([[graft.checks.SpanInvariant.verdicts]]).
+  * in ONE loop over the two span buffers, the only span kernel. It
+  * equals `size(SpanInvariant.violationsColumn)` plus
+  * `size(RuleCompiler.violations)`, the two HOF spec forms (FunctionsSpec,
+  * on the fixture join plus edge rows); with an empty rule set it is the
+  * mismatch count alone ([[graft.checks.SpanInvariant.verdicts]]), and
+  * [[SpanMismatchIndices]] lists the indices where that count is non-zero.
+  *
+  * Mismatch := any of (kind, text, media_ref, offset) differing null-safely
+  * (the per-row invariant from BASELINE.json input_hint), an index present
+  * on only one side (length mismatch), or a null element against a
+  * non-null one; two null elements do not mismatch. Rules see docs-side
+  * (`a`) spans only, and skip a null element.
+  *
+  * The walk reads both arrays through `getStruct`, whatever their class:
+  * the `UnsafeArrayData` a projection over the join produces, or the
+  * `ColumnarArray`s [[graft.checks.ZipSortedBucketsExec]] passes straight
+  * off the vectorized scan. FunctionsSpec pins the kernel against the HOF
+  * forms over the join, and ValidationSpec pins the merge against the join.
   */
 final class VerdictCounter(ki: Int, ti: Int, mi: Int, oi: Int,
     rc: RuleCounter) extends Serializable {
   private def strEq(x: UTF8String, y: UTF8String): Boolean =
     if (x == null) y == null else x.equals(y)
 
-  /** The hot entry: when both span buffers are UnsafeArrayData (what a
-    * codegen'd projection over parquet produces, and what the merge's
-    * copied rows hold), walk them with TWO REUSED UnsafeRow cursors —
-    * `getStruct` allocates a fresh wrapper per call, which at 5M docs ×
-    * 8 spans × 2 sides was ~80M short-lived objects per flagship rep.
-    * The cursor `pointTo` uses the documented UnsafeArrayData element
-    * layout (8-byte offset&length slot per element after the header —
-    * the exact arithmetic of UnsafeArrayData.getStruct); any other input
-    * shape falls back to the unchanged generic walk. The other shape in
-    * practice is the `ColumnarArray` pair that
-    * [[graft.checks.ZipSortedBucketsExec]] passes straight off the
-    * vectorized scan. FunctionsSpec pins fused ≡ HOF mismatches + HOF
-    * rule violations over the real corpus (the unsafe path), and
-    * ValidationSpec pins the merge against the join (the columnar path).
-    */
-  def count(a: ArrayData, b: ArrayData): Int = (a, b) match {
-    case (ua: org.apache.spark.sql.catalyst.expressions.UnsafeArrayData,
-        ub: org.apache.spark.sql.catalyst.expressions.UnsafeArrayData) =>
-      val ca = new UnsafeSpanCursor; ca.reset(ua)
-      val cb = new UnsafeSpanCursor; cb.reset(ub)
-      countWith(ua, ub, ua.numElements(), ub.numElements(),
-        ca.at, cb.at)
-    case _ =>
-      countWith(a, b, a.numElements(), b.numElements(),
-        i => a.getStruct(i, 4), i => b.getStruct(i, 4))
-  }
-
-  private def countWith(a: ArrayData, b: ArrayData, na: Int, nbb: Int,
-      structA: Int => InternalRow, structB: Int => InternalRow): Int = {
-    val n = math.max(na, nbb)
+  def count(a: ArrayData, b: ArrayData): Int = {
+    val na = a.numElements()
+    val nb = b.numElements()
+    val n = math.max(na, nb)
     var c = 0
     var i = 0
     while (i < n) {
-      if (i >= na || i >= nbb) {
-        c += 1 // index present on one side only = mismatch
-        if (i < na && !a.isNullAt(i)) c += rc.countSpan(structA(i))
-      } else {
-        val aN = a.isNullAt(i)
-        val bN = b.isNullAt(i)
-        if (aN || bN) {
-          if (!(aN && bN)) c += 1
-          if (!aN) c += rc.countSpan(structA(i))
-        } else {
-          // decode the a-side span ONCE; both the mismatch compare and
-          // the rules loop read the same locals
-          val sa = structA(i)
-          val sb = structB(i)
-          val ak = if (sa.isNullAt(ki)) null else sa.getUTF8String(ki)
-          val at = if (sa.isNullAt(ti)) null else sa.getUTF8String(ti)
-          val am = if (sa.isNullAt(mi)) null else sa.getUTF8String(mi)
-          val aoN = sa.isNullAt(oi)
-          val ao = if (aoN) 0 else sa.getInt(oi)
-          val bk = if (sb.isNullAt(ki)) null else sb.getUTF8String(ki)
-          val bt = if (sb.isNullAt(ti)) null else sb.getUTF8String(ti)
-          val bm = if (sb.isNullAt(mi)) null else sb.getUTF8String(mi)
-          val boN = sb.isNullAt(oi)
-          if (!strEq(ak, bk) || !strEq(at, bt) || !strEq(am, bm) ||
-            aoN != boN || (!aoN && ao != sb.getInt(oi))) c += 1
-          // route the decoded values into their ordinal slots (ki/ti/
-          // mi/oi are a permutation of 0..3, constant per plan — the
-          // conditionals fold)
-          @inline def u(slot: Int): UTF8String =
-            if (slot == ki) ak else if (slot == ti) at
-            else if (slot == mi) am else null
-          @inline def nul(slot: Int): Boolean =
-            if (slot == oi) aoN else u(slot) == null
-          @inline def v(slot: Int): Long = if (slot == oi) ao.toLong else 0L
-          c += rc.countSpanDecoded(
-            nul(0), u(0), v(0), nul(1), u(1), v(1),
-            nul(2), u(2), v(2), nul(3), u(3), v(3))
-        }
-      }
+      c += countAt(a, b, na, nb, i)
       i += 1
     }
     c
   }
+
+  /** Index `i`'s mismatch (0 or 1) plus its docs-side rule violations;
+    * `na` and `nb` are the two array lengths.
+    */
+  def countAt(a: ArrayData, b: ArrayData, na: Int, nb: Int, i: Int): Int =
+    if (i >= na || i >= nb) {
+      // index present on one side only = mismatch
+      if (i < na && !a.isNullAt(i)) 1 + rc.countSpan(a.getStruct(i, 4))
+      else 1
+    } else {
+      val aN = a.isNullAt(i)
+      val bN = b.isNullAt(i)
+      if (aN || bN) {
+        (if (aN && bN) 0 else 1) +
+          (if (aN) 0 else rc.countSpan(a.getStruct(i, 4)))
+      } else {
+        // decode the a-side span ONCE; both the mismatch compare and
+        // the rules loop read the same locals
+        val sa = a.getStruct(i, 4)
+        val sb = b.getStruct(i, 4)
+        val ak = if (sa.isNullAt(ki)) null else sa.getUTF8String(ki)
+        val at = if (sa.isNullAt(ti)) null else sa.getUTF8String(ti)
+        val am = if (sa.isNullAt(mi)) null else sa.getUTF8String(mi)
+        val aoN = sa.isNullAt(oi)
+        val ao = if (aoN) 0 else sa.getInt(oi)
+        val bk = if (sb.isNullAt(ki)) null else sb.getUTF8String(ki)
+        val bt = if (sb.isNullAt(ti)) null else sb.getUTF8String(ti)
+        val bm = if (sb.isNullAt(mi)) null else sb.getUTF8String(mi)
+        val boN = sb.isNullAt(oi)
+        val mismatch = !strEq(ak, bk) || !strEq(at, bt) || !strEq(am, bm) ||
+          aoN != boN || (!aoN && ao != sb.getInt(oi))
+        // route the decoded values into their ordinal slots (ki/ti/
+        // mi/oi are a permutation of 0..3, constant per plan — the
+        // conditionals fold)
+        @inline def u(slot: Int): UTF8String =
+          if (slot == ki) ak else if (slot == ti) at
+          else if (slot == mi) am else null
+        @inline def nul(slot: Int): Boolean =
+          if (slot == oi) aoN else u(slot) == null
+        @inline def v(slot: Int): Long = if (slot == oi) ao.toLong else 0L
+        (if (mismatch) 1 else 0) + rc.countSpanDecoded(
+          nul(0), u(0), v(0), nul(1), u(1), v(1),
+          nul(2), u(2), v(2), nul(3), u(3), v(3))
+      }
+    }
 }
 
 object VerdictCounter {
   /** The fused kernel for span arrays of type `spansType` (the docs
     * side's; the reference side is read with the same field ordinals).
     */
-  def apply(spansType: DataType, rules: Seq[CompactRule]): VerdictCounter = {
-    val (ki, ti, mi, oi) = SpanCompare.fieldOrdinals(spansType)
+  def apply(spansType: DataType, rules: Seq[SpanRule]): VerdictCounter = {
     val st = spansType.asInstanceOf[ArrayType]
       .elementType.asInstanceOf[StructType]
     val ordinals = st.fieldNames.zipWithIndex.toMap
-    new VerdictCounter(ki, ti, mi, oi,
+    new VerdictCounter(ordinals("kind"), ordinals("text"),
+      ordinals("media_ref"), ordinals("offset"),
       new RuleCounter(rules.toArray, ordinals, ordinals("kind"),
         st.fields.map(_.dataType == StringType)))
   }
 }
 
 case class SpanVerdictCount(left: Expression, right: Expression,
-    rules: Seq[CompactRule])
+    rules: Seq[SpanRule])
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
 
   override def dataType: DataType = IntegerType
@@ -462,6 +420,6 @@ object SpanVerdictCount {
       rules: Seq[SpanRule]): Column = {
     GraftBridge.column(SpanVerdictCount(
       GraftBridge.expression(spans), GraftBridge.expression(refSpans),
-      CompactRule.from(rules)))
+      rules))
   }
 }

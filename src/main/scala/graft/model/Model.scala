@@ -3,10 +3,14 @@ package graft.model
 /** Core data model of the validation engine.
   *
   * Mirrors the reference's logical model (SURVEY.md §1): a document is one
-  * row of `(doc_id, spans)` per BASELINE.json `input_hint`; the reference's
+  * row of `(doc_id, spans)` per BASELINE.json `input_hint`. Verdicts and
+  * violations are frames, not case classes: the reference's
   * `Map<docKey, OutputUnit>` (YamlSchemaValidatorRunner.java:69) becomes a
-  * `Dataset[DocVerdict]`, and each NetworkNT OutputUnit detail
-  * (testreport/invalidyaml.json:6-14) becomes a [[Violation]] row.
+  * `(doc_id, part, valid, n_violations)` frame
+  * ([[graft.checks.SpanInvariant.verdicts]]), and each NetworkNT
+  * OutputUnit detail (testreport/invalidyaml.json:6-14) a
+  * `{pointer, keyword, message, schemaLocation}` struct in a doc's
+  * violations array.
   */
 final case class Span(
     kind: String,
@@ -18,19 +22,3 @@ final case class Doc(
     doc_id: String,
     spans: Seq[Span],
     part: String)
-
-/** One failed keyword — shape pinned by the reference golden
-  * `testreport/invalidyaml.json:6-14` (evaluationPath/schemaLocation/
-  * instanceLocation/errors{keyword->message}).
-  */
-final case class Violation(
-    doc_id: String,
-    pointer: String,
-    keyword: String,
-    message: String,
-    schemaLocation: String)
-
-final case class DocVerdict(
-    doc_id: String,
-    valid: Boolean,
-    violations: Seq[Violation])

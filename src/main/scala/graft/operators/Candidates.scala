@@ -88,33 +88,6 @@ object Candidates {
       : DataFrame =
     if (rows <= gateOverride.getOrElse(maxRows)) broadcast(df) else df
 
-  /** Read a [[stage]]d frame's observed gate count WITHOUT risking an
-    * indefinite block. The staged-count pattern relies on an ordering
-    * contract — some downstream action must execute the observed
-    * subtree before the count is read; `Observation.get` would hang
-    * silently forever if a refactor reordered the consumers (ADVICE r5).
-    * This polls the bounded accessor until `timeoutMs`, then falls back
-    * to counting the staged frame directly — which executes (and caches)
-    * it, so a violated ordering degrades to one extra pass and a loud
-    * warning instead of a hang.
-    */
-  private def observedCount(obs: Observation,
-      staged: DataFrame, timeoutMs: Long = 30000L): Long = {
-    val deadline = System.nanoTime() + timeoutMs * 1000000L
-    def poll() = // waits up to ~100 ms per call
-      org.apache.spark.sql.GraftBridge.observationOrEmpty(obs)
-    var m = poll()
-    while (m.isEmpty && System.nanoTime() < deadline) m = poll()
-    m.get("n") match {
-      case Some(n) => n.asInstanceOf[Long]
-      case None =>
-        System.err.println("[candidates] WARN observed gate count not " +
-          "delivered within timeout; counting the staged frame directly " +
-          "(an upstream consumer-ordering contract was violated)")
-        staged.count()
-    }
-  }
-
   /** How [[scorePairs]] reads and scores a corpus of `(id, payload)`
     * rows: `derive` turns the payload column into the score input once
     * the rows are pruned to candidates (shingling a text; identity for
@@ -208,7 +181,14 @@ object Candidates {
         (both.select(col(id).as("id_a"), col(derived).as(a)),
          both.select(col(id).as("id_b"), col(derived).as(b)))
     }
-    val out = hintIfSmall(cand, observedCount(pairObs, cand), IdPairRowGate)
+    // the gate count rides the action that staged `cand`; if that
+    // ordering contract breaks, count the staged frame directly (it is
+    // cached, so one extra pass)
+    val nCand = GraftBridge.observedMetric[Long](pairObs, "n", 30000L,
+      "[candidates] WARN observed gate count not delivered within " +
+        "timeout; counting the staged frame directly (an upstream " +
+        "consumer-ordering contract was violated)")(cand.count())
+    val out = hintIfSmall(cand, nCand, IdPairRowGate)
       .join(sideA, Seq("id_a"))
       .join(sideB, Seq("id_b"))
       .select(col("id_a"), col("id_b"), score(col(a), col(b)).as(as))

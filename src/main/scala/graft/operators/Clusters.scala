@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Near-dup CLUSTERS and the keep decision. All three near-dup paths
@@ -34,37 +34,16 @@ object Clusters {
     */
   val MaxRounds = 50
 
-  /** Bounded read of an observe() metric riding an eager
-    * localCheckpoint: metrics are delivered asynchronously on the
-    * listener bus after the checkpoint action returns, so poll briefly
-    * and fall back to recomputing from the (already materialized)
-    * checkpoint blocks with a loud warning rather than blocking forever
-    * — the [[Candidates.observedCount]] discipline.
+  /** Warning of a checkpoint-ride observe() metric that was not
+    * delivered in time: metrics arrive asynchronously on the listener bus
+    * after the eager localCheckpoint returns, so each read is bounded
+    * ([[org.apache.spark.sql.GraftBridge.observedMetric]], 10 s) and falls
+    * back to recomputing from the already materialized checkpoint blocks.
     */
-  private def observedMetric[A](obs: org.apache.spark.sql.Observation,
-      name: String)(fallback: => A): A = {
-    val deadline = System.nanoTime() + 10000L * 1000000L
-    var m = org.apache.spark.sql.GraftBridge.observationOrEmpty(obs)
-    while (m.isEmpty && System.nanoTime() < deadline)
-      m = org.apache.spark.sql.GraftBridge.observationOrEmpty(obs)
-    m.get(name) match {
-      case Some(v) => v.asInstanceOf[A]
-      case None =>
-        System.err.println("[clusters] WARN checkpoint-ride observe " +
-          s"metric '$name' not delivered within timeout; recomputing " +
-          "from the checkpointed blocks")
-        fallback
-    }
-  }
-
-  private def observedLong(obs: org.apache.spark.sql.Observation,
-      name: String)(fallback: => Long): Long =
-    observedMetric[Long](obs, name)(fallback)
-
-  private def observedDecimal(obs: org.apache.spark.sql.Observation,
-      name: String)(fallback: => java.math.BigDecimal)
-      : java.math.BigDecimal =
-    observedMetric[java.math.BigDecimal](obs, name)(fallback)
+  private def lateMetric(name: String): String =
+    "[clusters] WARN checkpoint-ride observe " +
+      s"metric '$name' not delivered within timeout; recomputing " +
+      "from the checkpointed blocks"
 
   /** Connected components of the undirected graph given as
     * `(id_a, id_b)` edge rows: returns `(doc_id, cluster_id)` where
@@ -112,7 +91,8 @@ object Clusters {
       // NPE (the coalesce in ckptWithSum is the belt; this is the
       // suspender — and it returns after one action instead of two
       // rounds)
-      if (observedLong(eObs, "n")(m.count()) == 0L) {
+      if (GraftBridge.observedMetric[Long](eObs, "n", 10000L,
+          lateMetric("n"))(m.count()) == 0L) {
         return m.select(col("id_a").as("doc_id"),
           col("id_a").as("cluster_id")).limit(0)
       }
@@ -154,7 +134,8 @@ object Clusters {
           coalesce(sum(col("label").cast("decimal(38,0)")),
             lit(java.math.BigDecimal.ZERO)).as("s"))
         .localCheckpoint(true)
-      val s = observedDecimal(o, "s")(
+      val s = GraftBridge.observedMetric[java.math.BigDecimal](o, "s",
+          10000L, lateMetric("s"))(
         m.agg(coalesce(sum(col("label").cast("decimal(38,0)")),
           lit(java.math.BigDecimal.ZERO))).head.getDecimal(0))
       (m, s)
@@ -216,7 +197,7 @@ object Clusters {
     * table share.
     */
   private def pairEdges(s: SparkSession, dir: String): DataFrame =
-    org.apache.spark.sql.GraftBridge.stripTopSort(
+    GraftBridge.stripTopSort(
       Dedup.minhashCandidates(s, dir)).select(col("id_a"), col("id_b"))
 
   def dupClusters(s: SparkSession, dir: String): DataFrame =

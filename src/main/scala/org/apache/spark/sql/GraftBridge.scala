@@ -51,9 +51,32 @@ object GraftBridge {
     spark.asInstanceOf[classic.SparkSession].leafNodeDefaultParallelism
 
   /** Bounded (~100 ms) non-throwing read of an Observation's metrics —
-    * `getOrEmpty` is private[sql]; the gate-count helper polls this
-    * instead of blocking forever on `get` (ADVICE r5).
+    * `getOrEmpty` is private[sql]; [[observedMetric]] polls this instead
+    * of blocking forever on `get` (ADVICE r5).
     */
   def observationOrEmpty(obs: Observation): Map[String, Any] =
     obs.getOrEmpty
+
+  /** Metric `name` of `obs`, read without risking an indefinite block.
+    * Observed metrics arrive asynchronously on the listener bus after the
+    * action that ran the observed subtree, and only if some action ran
+    * it; `Observation.get` would hang silently if a refactor reordered
+    * the consumers. This polls [[observationOrEmpty]] until `timeoutMs`
+    * has passed, then prints `warning` to stderr and returns `fallback`
+    * (recomputing the value), so a violated ordering costs one extra pass
+    * and a loud warning instead of a hang.
+    */
+  def observedMetric[A](obs: Observation, name: String, timeoutMs: Long,
+      warning: => String)(fallback: => A): A = {
+    val deadline = System.nanoTime() + timeoutMs * 1000000L
+    var m = observationOrEmpty(obs)
+    while (m.isEmpty && System.nanoTime() < deadline)
+      m = observationOrEmpty(obs)
+    m.get(name) match {
+      case Some(v) => v.asInstanceOf[A]
+      case None =>
+        System.err.println(warning)
+        fallback
+    }
+  }
 }

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.checks.SpanInvariant
 import graft.functions.{NumStatsAgg, TDigestQuantile}
@@ -211,12 +212,53 @@ class FunctionsSpec extends SparkSpec {
     (spark.createDataFrame(a), spark.createDataFrame(b))
   }
 
+  /** `(doc_id, spans, ref_spans)` rows of span-pair shapes `Interleaved`
+    * never makes, for the kernel-vs-HOF tests: a length mismatch each way
+    * (the extra docs-side span breaks benchRules), a null reference-side
+    * element, and each of kind, text, media_ref and offset null on one
+    * side. `docsNullElement` adds a null docs-side element, on which the
+    * forms agree only under rules that a null span cannot violate (no
+    * rules, docRules).
+    *
+    * Left out, because the HOF forms and the kernel disagree on them
+    * today (ROADMAP item 1): a null element on both sides, a docs-side
+    * null element under benchRules' unconditional `required` rules, and
+    * a null `spans` array.
+    */
+  private def spanEdgePairs(docsNullElement: Boolean): DataFrame = {
+    val txt = Row("text", "hello", null, 0)
+    val img = Row("image", null, "m1", 1)
+    val bad = Row("video", " x", "q", 2000) // violates benchRules
+    val rows = Seq(
+      Row("len_docs", Seq(txt, img, bad), Seq(txt, img)),
+      Row("len_ref", Seq(txt), Seq(txt, img)),
+      Row("ref_null", Seq(txt, bad), Seq(txt, null)),
+      Row("kind_docs", Seq(Row(null, "hello", null, 0)), Seq(txt)),
+      Row("kind_ref", Seq(txt), Seq(Row(null, "hello", null, 0))),
+      Row("text_docs", Seq(Row("text", null, null, 0)), Seq(txt)),
+      Row("text_ref", Seq(txt), Seq(Row("text", null, null, 0))),
+      Row("media_docs", Seq(Row("image", null, null, 1)), Seq(img)),
+      Row("media_ref", Seq(img), Seq(Row("image", null, null, 1))),
+      Row("offset_docs", Seq(Row("text", "hello", null, null)), Seq(txt)),
+      Row("offset_ref", Seq(txt), Seq(Row("text", "hello", null, null)))) ++
+      (if (docsNullElement) Seq(Row("docs_null", Seq(null, img),
+        Seq(txt, img))) else Nil)
+    val span = ArrayType(StructType(
+      Seq("kind", "text", "media_ref").map(StructField(_, StringType)) :+
+        StructField("offset", IntegerType)))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+      StructField("doc_id", StringType), StructField("spans", span),
+      StructField("ref_spans", span))))
+  }
+
   test("custom SpanMismatchIndices expression ≡ HOF violations column") {
     val documents = Tables.documents(spark, "/root/testdata/sf0.001")
     val docs = graft.data.Interleaved.docs(documents)
     val ref = graft.data.Interleaved.referenceSpans(documents)
       .select(col("doc_id"), col("spans").as("ref_spans"))
     val joined = docs.join(ref, Seq("doc_id"))
+      .select(col("doc_id"), col("spans"), col("ref_spans"))
+      .unionByName(spanEdgePairs(docsNullElement = true))
     val both = joined.select(
       col("doc_id"),
       graft.checks.SpanInvariant
@@ -288,14 +330,23 @@ class FunctionsSpec extends SparkSpec {
     val joined = docs.join(
       ref.select(col("doc_id"), col("spans").as("ref_spans")),
       Seq("doc_id"))
-    val both = joined.select(
-      graft.functions.SpanVerdictCount.spanVerdictCount(col("spans"),
-        col("ref_spans"), RuleCompiler.benchRules).as("fused"),
-      (size(SpanInvariant.violationsColumn(col("spans"), col("ref_spans"))) +
-        size(RuleCompiler.violations(col("spans"), RuleCompiler.benchRules)))
-        .as("hof"))
+    def fusedVsHof(pairs: DataFrame, rules: Seq[SpanRule]): DataFrame =
+      pairs.select(
+        graft.functions.SpanVerdictCount.spanVerdictCount(col("spans"),
+          col("ref_spans"), rules).as("fused"),
+        (size(SpanInvariant.violationsColumn(col("spans"),
+          col("ref_spans"))) +
+          size(RuleCompiler.violations(col("spans"), rules))).as("hof"))
+    val both = fusedVsHof(
+      joined.select(col("doc_id"), col("spans"), col("ref_spans"))
+        .unionByName(spanEdgePairs(docsNullElement = false)),
+      RuleCompiler.benchRules)
     assert(both.filter(col("fused") =!= col("hof")).count() === 0)
     assert(both.filter(col("fused") > 0).count() > 0)
+    for (rules <- Seq(Nil, RuleCompiler.docRules)) {
+      val edges = fusedVsHof(spanEdgePairs(docsNullElement = true), rules)
+      assert(edges.filter(col("fused") =!= col("hof")).count() === 0)
+    }
     // SpanInvariant.verdicts runs the kernel with no rules: its
     // n_violations is the HOF mismatch count, doc for doc
     def verdictCounts(d: DataFrame, r: DataFrame): Seq[(String, Int)] =
