@@ -181,10 +181,6 @@ object Verdicts {
       count_if(col("valid")).as("valid_docs"),
       count_if(!col("valid")).as("invalid_docs"),
       sum(col("n_violations")).cast("long").as("violations"))
-
-  /** Run verdict: exit-code semantics (K3) — true iff every doc valid. */
-  def runValid(docVerdicts: DataFrame): Boolean =
-    docVerdicts.agg(count_if(!col("valid"))).head.getLong(0) == 0L
 }
 
 object Stats {

@@ -29,6 +29,16 @@ import org.apache.spark.sql.functions._
   * (SURVEY.md §7.3 — Columns cannot recurse; beyond the depth limit a
   * recursive branch is vacuously valid, documented).
   *
+  * Each assertion keyword is defined once, in `keywords`: the instance
+  * types it applies to (JSON Schema 2020-12 — string keywords to
+  * strings, numeric keywords to numbers, `required` and
+  * `additionalProperties` to objects, array keywords to arrays, `type`,
+  * `enum`, `const` and the combinators to every value), its failure test
+  * over a [[View]] of the value and its message. The same definition
+  * serves a value at a path (`present && applies && fails`), each array
+  * element under `items` and a value inside a subschema (`oneOf`, `not`,
+  * `contains`, `additionalProperties`), so the three placements agree.
+  *
   * Evaluation has two entry points:
   *  - `violations(v)`: a single Column over a variant — convenient, but
   *    each check re-extracts its path (no CSE inside one projection).
@@ -147,24 +157,42 @@ object JsonSchemaCompiler {
 
   private def emptyViol: Column = array().cast(ViolationType)
 
-  /** 2020-12 format assertions implemented as anchored regexes. Unknown
-    * formats are annotations (no assertion), per the spec.
-    */
-  val formatRegexes: Map[String, String] = Formats.regexes
-
-  /** One extraction a check needs: a JSON path plus how to read it.
+  /** One extraction a keyword reads: a JSON path plus how to read it.
     * mode ∈ {variant, typeof, string, double, array, map}.
     */
   final case class Ext(path: String, mode: String)
 
-  /** Environment a check evaluates in: gives the Column for an Ext. */
-  type Env = Ext => Column
+  /** A value under check, read the ways keywords need: `read` gives the
+    * Column for an extraction whose path is relative to the value (`$` is
+    * the value itself). At a path the reads are `withViolations`' staged
+    * extractions; an array element or a subschema's value is read
+    * straight from its variant ([[View.of]]).
+    */
+  final class View(val read: Ext => Column) {
+    def value: Column = read(Ext("$", "variant"))
+    def jsonType: Column = read(Ext("$", "typeof"))
+    def str: Column = read(Ext("$", "string"))
+    def num: Column = read(Ext("$", "double"))
+    def arr: Column = read(Ext("$", "array"))
+    def obj: Column = read(Ext("$", "map"))
+    def field(name: String): Column =
+      read(Ext("$" + pathSeg(name), "variant"))
 
-  /** One compiled check: emits an ARRAY of violation structs (usually
-    * 0-or-1; per-element checks emit one per failing element).
+    /** The value at `segs` below this one. */
+    def at(segs: Seq[String]): View =
+      new View(e => read(Ext(path(segs) + e.path.drop(1), e.mode)))
+  }
+
+  object View {
+    def of(v: Column): View = new View(directExpr(v, _))
+  }
+
+  /** One compiled check: over a view of the document root, emits an
+    * ARRAY of violation structs (usually 0-or-1; per-element and
+    * per-key checks emit one per failing element or key).
     */
   final case class Check(pointer: String, keyword: String,
-      schemaLocation: String, emit: Env => Column)
+      schemaLocation: String, emit: View => Column)
 
   /** Map a schema_of_variant type string to the JSON-Schema type name.
     * Call only on non-SQL-null variants (missing keys are handled by the
@@ -200,21 +228,203 @@ object JsonSchemaCompiler {
     case m => try_variant_get(v, e.path, m)
   }
 
-  final case class CompiledSchema(checks: Seq[Check], exts: Seq[Ext]) {
+  // ---- the keyword table ------------------------------------------------
 
-    private lazy val extIndex: Map[Ext, Int] = exts.zipWithIndex.toMap
+  /** The subschema-satisfaction predicate handed to the combinators:
+    * whether a variant value satisfies a schema node (never NULL).
+    */
+  private type Sub = (JsonNode, Column) => Column
 
-    def violationsEnv(env: Env): Column =
-      checks.map(c => coalesce(c.emit(env), emptyViol))
+  /** One failure test of one schema node, over a view of the value. */
+  private sealed trait Test { def fails(v: View): Column }
+
+  /** Fails on the value as a whole: one violation. */
+  private final case class OnValue(test: View => Column,
+      message: View => Column) extends Test {
+    def fails(v: View): Column = test(v)
+  }
+
+  /** Fails per object key: one violation per key `keys` lists, at the
+    * key's pointer, with `message` of the key.
+    */
+  private final case class OnKeys(keys: View => Column,
+      message: Column => Column) extends Test {
+    def fails(v: View): Column = size(keys(v)) > 0
+  }
+
+  /** One assertion keyword, defined once for its three placements: a
+    * value at a path, an array element under `items`, and a value inside
+    * a subschema (`oneOf`, `not`, `contains`, `additionalProperties`,
+    * ...). `applies` lists the instance types it applies to (empty:
+    * every value), per JSON Schema 2020-12. `scalar` keywords are checked
+    * element by element under `items`; any other item keyword makes
+    * `items` check each element against the whole item schema.
+    * `tests(node, sub)` gives a node's failure tests: one per name for
+    * `required`, none for an unknown `format` (an annotation).
+    */
+  private final case class Keyword(name: String, applies: Seq[String],
+      scalar: Boolean)(val tests: (JsonNode, Sub) => Seq[Test]) {
+
+    /** Whether the keyword applies to the value `v` reads; None when it
+      * applies to every value.
+      */
+    def appliesTo(v: View): Option[Column] =
+      if (applies.isEmpty) None else Some(v.jsonType.isin(applies: _*))
+  }
+
+  private val AnyType = Seq.empty[String]
+  private val Strings = Seq("string")
+  private val Numbers = Seq("integer", "number")
+  private val Objects = Seq("object")
+  private val Arrays = Seq("array")
+
+  private def typeNames(node: JsonNode): Seq[String] =
+    if (node.isArray) node.elements().asScala.map(_.asText()).toSeq
+    else Seq(node.asText())
+
+  /** JSON-Schema: `number` accepts integers too. */
+  private def accepted(expected: Seq[String]): Seq[String] =
+    if (expected.contains("number") && !expected.contains("integer"))
+      expected :+ "integer"
+    else expected
+
+  private val keywords: Seq[Keyword] = {
+    // a keyword with one test, built from its own schema value `m`
+    def one(name: String, applies: Seq[String], scalar: Boolean)(
+        test: (JsonNode, Sub) => View => Column, message: JsonNode => String) =
+      Keyword(name, applies, scalar)((n, sub) =>
+        Seq(OnValue(test(n.get(name), sub), _ => lit(message(n.get(name))))))
+    def numeric(name: String, fails: (Column, Double) => Column,
+        message: String) =
+      one(name, Numbers, scalar = true)(
+        (m, _) => v => fails(v.num, m.asDouble()),
+        m => s"$message ${m.asText()}")
+    def sizeBound(name: String, applies: Seq[String], scalar: Boolean,
+        of: View => Column, fails: (Column, Int) => Column,
+        message: Int => String) =
+      one(name, applies, scalar)(
+        (m, _) => v => fails(of(v), m.asInt()), m => message(m.asInt()))
+    def branches(name: String, fails: Seq[Column] => Column,
+        message: String) =
+      one(name, AnyType, scalar = false)((bs, sub) => v =>
+        fails(bs.elements().asScala.toSeq.map(sub(_, v.value))), _ => message)
+    def strings(n: JsonNode) = n.elements().asScala.map(_.asText()).toSeq
+
+    Seq(
+      Keyword("type", AnyType, scalar = true) { (n, _) =>
+        val expected = typeNames(n.get("type"))
+        val shown =
+          if (expected.size == 1) expected.head
+          else expected.mkString("[", ", ", "]")
+        Seq(OnValue(v => !v.jsonType.isin(accepted(expected): _*),
+          v => format_string("%s found, " + shown + " expected", v.jsonType)))
+      },
+      // a JSON null reads as a NULL string: not a member, so it fails
+      one("enum", AnyType, scalar = true)((m, _) => v =>
+        !coalesce(v.str.isin(strings(m): _*), lit(false)), m =>
+        "does not have a value in the enumeration " +
+          strings(m).mkString("[", ", ", "]")),
+      one("const", AnyType, scalar = true)((m, _) => v =>
+        !(v.str <=> m.asText()),
+        m => s"must be the constant value '${m.asText()}'"),
+      one("pattern", Strings, scalar = true)((m, _) => v =>
+        !v.str.rlike(m.asText()),
+        m => s"does not match the regex pattern ${m.asText()}"),
+      Keyword("format", Strings, scalar = true) { (n, _) =>
+        val fmt = n.get("format").asText()
+        Formats.regexes.get(fmt).toSeq.map(re =>
+          OnValue(v => !v.str.rlike(re),
+            _ => lit(s"does not match the $fmt pattern")))
+      },
+      numeric("minimum", _ < _, "must have a minimum value of"),
+      numeric("maximum", _ > _, "must have a maximum value of"),
+      numeric("exclusiveMinimum", _ <= _,
+        "must have an exclusive minimum value of"),
+      numeric("exclusiveMaximum", _ >= _,
+        "must have an exclusive maximum value of"),
+      numeric("multipleOf", (d, m) => !(d % m === 0.0),
+        "must be multiple of"),
+      sizeBound("minLength", Strings, scalar = true, v => length(v.str),
+        _ < _, m => s"must be at least $m characters long"),
+      sizeBound("maxLength", Strings, scalar = true, v => length(v.str),
+        _ > _, m => s"must be at most $m characters long"),
+      Keyword("required", Objects, scalar = false) { (n, _) =>
+        strings(n.get("required")).map(name => OnValue(_.field(name).isNull,
+          _ => lit(s"required property '$name' not found")))
+      },
+      sizeBound("minItems", Arrays, scalar = false, v => size(v.arr), _ < _,
+        m => s"must have at least $m items"),
+      sizeBound("maxItems", Arrays, scalar = false, v => size(v.arr), _ > _,
+        m => s"must have at most $m items"),
+      Keyword("uniqueItems", Arrays, scalar = false) { (n, _) =>
+        if (!n.get("uniqueItems").asBoolean()) Nil
+        else Seq(OnValue(v =>
+          size(array_distinct(transform(v.arr, e => to_json(e)))) =!=
+            size(v.arr),
+          _ => lit("must have only unique items in the array")))
+      },
+      one("contains", Arrays, scalar = false)((s, sub) => v =>
+        !coalesce(exists(v.arr, sub(s, _)), lit(false)), _ =>
+        "does not contain an element that matches the contains schema"),
+      branches("oneOf", _.map(_.cast("int")).reduce(_ + _) =!= 1,
+        "must be valid against exactly one schema"),
+      branches("anyOf", bs => !bs.reduce(_ || _),
+        "must be valid against at least one schema"),
+      branches("allOf", bs => !bs.reduce(_ && _),
+        "must be valid against all schemas"),
+      one("not", AnyType, scalar = false)((s, sub) => v => sub(s, v.value),
+        _ => "must not be valid against the schema"),
+      Keyword("additionalProperties", Objects, scalar = false) { (n, sub) =>
+        val ap = n.get("additionalProperties")
+        val declared =
+          if (!n.has("properties")) Seq.empty
+          else n.get("properties").fieldNames().asScala.toSeq
+        def isExtra(k: Column) =
+          if (declared.isEmpty) lit(true) else !k.isin(declared: _*)
+        def notAllowed(why: String)(k: Column) =
+          concat(lit("property '"), k, lit(s"' $why"))
+        if (ap.isBoolean && ap.asBoolean()) Nil
+        else if (ap.isBoolean)
+          Seq(OnKeys(v => filter(map_keys(v.obj), isExtra(_)),
+            notAllowed("is not allowed")))
+        else
+          Seq(OnKeys(v => map_keys(map_filter(v.obj,
+              (k, mv) => isExtra(k) && !sub(ap, mv))),
+            notAllowed("does not match the additional-properties schema")))
+      })
+  }
+
+  private val scalarKeywords: Set[String] =
+    keywords.filter(_.scalar).map(_.name).toSet
+
+  /** Whether test `t` of keyword `k` fails on the value `v` reads: the
+    * keyword applies to the value's type and its test fails. NULL when
+    * the test cannot be evaluated; every placement counts that as not
+    * failing.
+    */
+  private def failing(k: Keyword, t: Test, v: View): Column =
+    k.appliesTo(v).fold(t.fails(v))(_ && t.fails(v))
+
+  final case class CompiledSchema(checks: Seq[Check]) {
+
+    /** Every (path, mode) a check reads, in first-read order: the
+      * extractions `withViolations` stages.
+      */
+    lazy val exts: Seq[Ext] = {
+      val seen = scala.collection.mutable.LinkedHashSet.empty[Ext]
+      checks.foreach(_.emit(new View(e => { seen += e; lit(null) })))
+      seen.toSeq
+    }
+
+    private def violationsOf(root: View): Column =
+      checks.map(c => coalesce(c.emit(root), emptyViol))
         .reduceOption(concat(_, _)).getOrElse(emptyViol)
 
     /** Violations array for a VARIANT document column (single-Column
       * path; each check extracts its own paths — fine for few checks,
       * use [[withViolations]] for wide schemas).
       */
-    def violations(v: Column): Column = violationsEnv(directExpr(v, _))
-
-    def valid(v: Column): Column = size(violations(v)) === 0
+    def violations(v: Column): Column = violationsOf(View.of(v))
 
     /** Staged CSE evaluation (see object Scaladoc): parse once, extract
       * each referenced (path, mode) once, evaluate checks over the
@@ -233,9 +443,7 @@ object JsonSchemaCompiler {
         directExpr(col("__v"), e).as(s"__x$i")
       }
       val s2 = s1.select((keep.map(col) :+ col("__v")) ++ extCols: _*)
-      val env: Env = e => extIndex.get(e)
-        .map(i => col(s"__x$i"))
-        .getOrElse(directExpr(col("__v"), e))
+      val extIndex = exts.zipWithIndex.toMap
       // stage 3: all checks over the extracted columns, in one plain
       // select. The staged aliases keep each extraction evaluated once
       // (CollapseProject does not re-inline multi-referenced non-cheap
@@ -243,7 +451,8 @@ object JsonSchemaCompiler {
       // wide schemas could still push the fused codegen method past
       // HotSpot's JIT limit (BENCH.md code-cache note) — if that
       // surfaces, split stage 3 into chunked selects.
-      s2.select(keep.map(col) :+ violationsEnv(env).as(out): _*)
+      s2.select(keep.map(col) :+ violationsOf(
+        new View(e => col(s"__x${extIndex(e)}"))).as(out): _*)
     }
   }
 
@@ -271,10 +480,6 @@ object JsonSchemaCompiler {
     val idPrefix =
       if (root.has("$id")) root.get("$id").asText() else ""
     val checks = Seq.newBuilder[Check]
-    val exts = scala.collection.mutable.LinkedHashSet.empty[Ext]
-    def ext(p: String, mode: String): Ext = {
-      val e = Ext(p, mode); exts += e; e
-    }
 
     def resolveRef(node: JsonNode): JsonNode = {
       val ref = node.get("$ref").asText()
@@ -289,415 +494,99 @@ object JsonSchemaCompiler {
         .foldLeft(root)((n, seg) => n.get(seg))
     }
 
-    def typeNames(node: JsonNode): Seq[String] =
-      if (node.isArray) node.elements().asScala.map(_.asText()).toSeq
-      else Seq(node.asText())
+    /** `node` with its `$ref` resolved, and the `$ref` depth below it. */
+    def deref(node: JsonNode, refDepth: Int): (JsonNode, Int) =
+      if (node.has("$ref")) (resolveRef(node), refDepth + 1)
+      else (node, refDepth)
 
-    /** JSON-Schema: `number` accepts integers too. */
-    def accepted(expected: Seq[String]): Seq[String] =
-      if (expected.contains("number") && !expected.contains("integer"))
-        expected :+ "integer"
-      else expected
+    /** The assertions `node` makes, in table order; its subschemas are
+      * checked at `$ref` depth `rd`.
+      */
+    def assertions(node: JsonNode, rd: Int): Seq[(Keyword, Test)] =
+      keywords.filter(k => node.has(k.name))
+        .flatMap(k => k.tests(node, validPred(_, _, rd)).map(k -> _))
 
     // ---- subschema satisfaction predicate (for oneOf/not/items/
     // additionalProperties — anywhere a whole subschema applies to one
-    // variant VALUE rather than a fixed path) -----------------------------
+    // variant VALUE rather than a fixed path): the conjunction of the
+    // node's assertions plus its recursion into properties and items
     def validPred(node0: JsonNode, v: Column, refDepth: Int): Column = {
       if (refDepth > maxRefDepth) return lit(true) // bounded unrolling
-      val node = if (node0.has("$ref")) resolveRef(node0) else node0
-      val rd = if (node0.has("$ref")) refDepth + 1 else refDepth
-      val jt = jsonType(v)
-      def str = try_variant_get(v, "$", "string")
-      def num = try_variant_get(v, "$", "double")
-      def elems = try_variant_get(v, "$", "array<variant>")
-      val preds = Seq.newBuilder[Column]
-      if (node.has("type"))
-        preds += jt.isin(accepted(typeNames(node.get("type"))): _*)
-      if (node.has("enum"))
-        preds += coalesce(str.isin(node.get("enum").elements().asScala
-          .map(_.asText()).toSeq: _*), lit(false))
-      if (node.has("const"))
-        preds += coalesce(str === node.get("const").asText(), lit(false))
-      if (node.has("pattern"))
-        preds += jt =!= "string" ||
-          coalesce(str.rlike(node.get("pattern").asText()), lit(false))
-      formatRegexes.get(
-          if (node.has("format")) node.get("format").asText() else "")
-        .foreach(re => preds += jt =!= "string" ||
-          coalesce(str.rlike(re), lit(false)))
-      if (node.has("minLength"))
-        preds += jt =!= "string" || length(str) >= node.get("minLength").asInt()
-      if (node.has("maxLength"))
-        preds += jt =!= "string" || length(str) <= node.get("maxLength").asInt()
-      val isNum = jt.isin("integer", "number")
-      if (node.has("minimum"))
-        preds += !isNum || num >= node.get("minimum").asDouble()
-      if (node.has("maximum"))
-        preds += !isNum || num <= node.get("maximum").asDouble()
-      if (node.has("exclusiveMinimum"))
-        preds += !isNum || num > node.get("exclusiveMinimum").asDouble()
-      if (node.has("exclusiveMaximum"))
-        preds += !isNum || num < node.get("exclusiveMaximum").asDouble()
-      if (node.has("multipleOf"))
-        preds += !isNum || num % node.get("multipleOf").asDouble() === 0.0
-      if (node.has("required"))
-        preds += jt =!= "object" ||
-          node.get("required").elements().asScala.map { r =>
-            try_variant_get(v, "$" + pathSeg(r.asText()), "variant").isNotNull
-          }.reduce(_ && _)
-      if (node.has("properties"))
-        node.get("properties").fields().asScala.foreach { e =>
-          val child = try_variant_get(v, "$" + pathSeg(e.getKey), "variant")
-          preds += child.isNull || validPred(e.getValue, child, rd)
-        }
-      if (node.has("items"))
-        preds += jt =!= "array" || coalesce(
-          forall(elems, e => validPred(node.get("items"), e, rd)), lit(true))
-      if (node.has("minItems"))
-        preds += jt =!= "array" || size(elems) >= node.get("minItems").asInt()
-      if (node.has("maxItems"))
-        preds += jt =!= "array" || size(elems) <= node.get("maxItems").asInt()
-      if (node.has("uniqueItems") && node.get("uniqueItems").asBoolean())
-        preds += jt =!= "array" ||
-          size(array_distinct(transform(elems, e => to_json(e)))) === size(elems)
-      if (node.has("contains"))
-        preds += jt =!= "array" || coalesce(
-          exists(elems, e => validPred(node.get("contains"), e, rd)),
-          lit(false))
-      if (node.has("oneOf"))
-        preds += node.get("oneOf").elements().asScala.map(b =>
-          coalesce(validPred(b, v, rd), lit(false)).cast("int"))
-          .reduce(_ + _) === 1
-      if (node.has("anyOf"))
-        preds += node.get("anyOf").elements().asScala.map(b =>
-          coalesce(validPred(b, v, rd), lit(false))).reduce(_ || _)
-      if (node.has("allOf"))
-        preds += node.get("allOf").elements().asScala.map(b =>
-          coalesce(validPred(b, v, rd), lit(false))).reduce(_ && _)
-      if (node.has("not"))
-        preds += !coalesce(validPred(node.get("not"), v, rd), lit(true))
-      if (node.has("additionalProperties")) {
-        val ap = node.get("additionalProperties")
-        val declared =
-          if (node.has("properties"))
-            node.get("properties").fieldNames().asScala.toSeq
-          else Seq.empty
-        val m = try_variant_get(v, "$", "map<string,variant>")
-        def isExtra(k: Column) =
-          if (declared.isEmpty) lit(true) else !k.isin(declared: _*)
-        if (ap.isBoolean && !ap.asBoolean())
-          preds += jt =!= "object" ||
-            size(filter(map_keys(m), k => isExtra(k))) === 0
-        else if (!ap.isBoolean)
-          preds += jt =!= "object" || size(map_keys(map_filter(m,
-            (k, mv) => isExtra(k) &&
-              !coalesce(validPred(ap, mv, rd), lit(false))))) === 0
-      }
-      preds.result().map(p => coalesce(p, lit(false)))
-        .reduceOption(_ && _).getOrElse(lit(true))
+      val (node, rd) = deref(node0, refDepth)
+      val value = View.of(v)
+      val holds = assertions(node, rd).map { case (k, t) =>
+        !coalesce(failing(k, t, value), lit(false))
+      } ++ Option(node.get("properties")).toSeq
+        .flatMap(_.fields().asScala).map { e =>
+          val child = value.field(e.getKey)
+          child.isNull || validPred(e.getValue, child, rd)
+        } ++ Option(node.get("items")).map(items =>
+          value.jsonType =!= "array" ||
+            coalesce(forall(value.arr, validPred(items, _, rd)), lit(true)))
+      holds.reduceOption(_ && _).getOrElse(lit(true))
     }
 
-    // ---- violation-struct helpers ---------------------------------------
     def viol(ptrCol: Column, keyword: String, msg: Column,
         loc: String): Column =
       struct(ptrCol.as("pointer"), lit(keyword).as("keyword"),
         msg.as("message"), lit(loc).as("schemaLocation"))
 
-    def single(cond: Column, ptr: String, keyword: String, msg: Column,
-        loc: String): Column =
-      when(coalesce(cond, lit(false)),
-        array(viol(lit(ptr), keyword, msg, loc))).otherwise(emptyViol)
-
-    // keywords handled per-element inside `items` with precise messages
-    val scalarItemKeywords = Set("type", "enum", "const", "pattern",
-      "format", "minimum", "maximum", "exclusiveMinimum",
-      "exclusiveMaximum", "multipleOf", "minLength", "maxLength")
-
-    // ---- the walk: path-based checks with registered extractions --------
+    // ---- the walk: each assertion at each path, then per element ------
     def walk(node0: JsonNode, segs: Seq[String], refDepth: Int): Unit = {
       if (refDepth > maxRefDepth) return // bounded unrolling
-      val node = if (node0.has("$ref")) resolveRef(node0) else node0
-      val nextRefDepth = if (node0.has("$ref")) refDepth + 1 else refDepth
-      val p = path(segs)
+      val (node, rd) = deref(node0, refDepth)
       val ptr = if (segs.isEmpty) "/" else pointer(segs)
       val loc = idPrefix + "#/" +
         segs.flatMap(s => Seq("properties", s)).mkString("/")
-      val vX = ext(p, "variant")
-      def present(env: Env): Column = env(vX).isNotNull
+      def keyPtr(k: Column) =
+        concat(lit(if (segs.isEmpty) "/" else ptr + "/"), k)
 
-      if (node.has("type")) {
-        val expected = typeNames(node.get("type"))
-        val expectedStr =
-          if (expected.size == 1) expected.head
-          else expected.mkString("[", ", ", "]")
-        val tX = ext(p, "typeof")
-        checks += Check(ptr, "type", s"$loc/type",
-          env => single(present(env) && !env(tX).isin(accepted(expected): _*),
-            ptr, "type", format_string("%s found, " + expectedStr +
-              " expected", env(tX)), s"$loc/type"))
-      }
-      if (node.has("enum")) {
-        val vals = node.get("enum").elements().asScala.map(_.asText()).toSeq
-        val sX = ext(p, "string")
-        checks += Check(ptr, "enum", s"$loc/enum",
-          env => single(present(env) && !env(sX).isin(vals: _*),
-            ptr, "enum", lit("does not have a value in the enumeration " +
-              vals.mkString("[", ", ", "]")), s"$loc/enum"))
-      }
-      if (node.has("const")) {
-        val c = node.get("const").asText()
-        val sX = ext(p, "string")
-        checks += Check(ptr, "const", s"$loc/const",
-          env => single(present(env) && env(sX) =!= c,
-            ptr, "const", lit(s"must be the constant value '$c'"),
-            s"$loc/const"))
-      }
-      if (node.has("pattern")) {
-        val re = node.get("pattern").asText()
-        val sX = ext(p, "string")
-        checks += Check(ptr, "pattern", s"$loc/pattern",
-          env => single(present(env) && !env(sX).rlike(re),
-            ptr, "pattern", lit(s"does not match the regex pattern $re"),
-            s"$loc/pattern"))
-      }
-      if (node.has("format")) {
-        val fmt = node.get("format").asText()
-        formatRegexes.get(fmt).foreach { re => // unknown → annotation only
-          val sX = ext(p, "string")
-          val tX = ext(p, "typeof")
-          checks += Check(ptr, "format", s"$loc/format",
-            env => single(env(tX) === "string" && !env(sX).rlike(re),
-              ptr, "format", lit(s"does not match the $fmt pattern"),
-              s"$loc/format"))
-        }
-      }
-      def numCheck(kw: String, testOf: (Column, Double) => Column,
-          msg: JsonNode => String): Unit = if (node.has(kw)) {
-        val m = node.get(kw).asDouble()
-        val dX = ext(p, "double")
-        checks += Check(ptr, kw, s"$loc/$kw",
-          env => single(present(env) && testOf(env(dX), m),
-            ptr, kw, lit(msg(node.get(kw))), s"$loc/$kw"))
-      }
-      numCheck("minimum", (d, m) => d < m,
-        n => s"must have a minimum value of ${n.asText()}")
-      numCheck("maximum", (d, m) => d > m,
-        n => s"must have a maximum value of ${n.asText()}")
-      numCheck("exclusiveMinimum", (d, m) => d <= m,
-        n => s"must have an exclusive minimum value of ${n.asText()}")
-      numCheck("exclusiveMaximum", (d, m) => d >= m,
-        n => s"must have an exclusive maximum value of ${n.asText()}")
-      numCheck("multipleOf", (d, m) => !(d % m === 0.0),
-        n => s"must be multiple of ${n.asText()}")
-      if (node.has("minLength")) {
-        val m = node.get("minLength").asInt()
-        val sX = ext(p, "string")
-        checks += Check(ptr, "minLength", s"$loc/minLength",
-          env => single(present(env) && length(env(sX)) < m,
-            ptr, "minLength", lit(s"must be at least $m characters long"),
-            s"$loc/minLength"))
-      }
-      if (node.has("maxLength")) {
-        val m = node.get("maxLength").asInt()
-        val sX = ext(p, "string")
-        checks += Check(ptr, "maxLength", s"$loc/maxLength",
-          env => single(present(env) && length(env(sX)) > m,
-            ptr, "maxLength", lit(s"must be at most $m characters long"),
-            s"$loc/maxLength"))
-      }
-      if (node.has("required")) {
-        node.get("required").elements().asScala.foreach { r =>
-          val name = r.asText()
-          val cX = ext(path(segs :+ name), "variant")
-          checks += Check(ptr, "required", s"$loc/required",
-            env => single(present(env) && env(cX).isNull,
-              ptr, "required", lit(s"required property '$name' not found"),
-              s"$loc/required"))
-        }
-      }
-      // ---- array keywords ----
-      if (node.has("items") || node.has("minItems") || node.has("maxItems")
-          || node.has("contains") ||
-          (node.has("uniqueItems") && node.get("uniqueItems").asBoolean())) {
-        val aX = ext(p, "array")
-        if (node.has("items")) {
-          val itemNode0 = node.get("items")
-          val itemNode =
-            if (itemNode0.has("$ref")) resolveRef(itemNode0) else itemNode0
-          // precise per-element checks for the scalar keywords
-          def elemCheck(kw: String, test: Column => Column,
-              msg: Column => Column): Unit =
-            checks += Check(ptr, kw, s"$loc/items/$kw",
-              env => coalesce(filter(transform(env(aX), (e, i) =>
-                when(coalesce(test(e), lit(false)),
-                  viol(concat(lit(ptr + "/"), i.cast("string")), kw,
-                    msg(e), s"$loc/items/$kw"))),
-                x => x.isNotNull), emptyViol))
-          if (itemNode.has("type")) {
-            val expected = typeNames(itemNode.get("type"))
-            val expectedStr =
-              if (expected.size == 1) expected.head
-              else expected.mkString("[", ", ", "]")
-            elemCheck("type", e => !jsonType(e).isin(accepted(expected): _*),
-              e => format_string("%s found, " + expectedStr + " expected",
-                jsonType(e)))
+      assertions(node, rd).foreach { case (k, t) =>
+        val at = s"$loc/${k.name}"
+        checks += Check(ptr, k.name, at, root => {
+          val v = root.at(segs)
+          val present = v.value.isNotNull
+          t match {
+            case OnValue(_, message) =>
+              when(coalesce(present && failing(k, t, v), lit(false)),
+                array(viol(lit(ptr), k.name, message(v), at)))
+                .otherwise(emptyViol)
+            case OnKeys(keys, message) =>
+              when(k.appliesTo(v).fold(present)(present && _),
+                transform(keys(v),
+                  key => viol(keyPtr(key), k.name, message(key), at)))
           }
-          if (itemNode.has("enum")) {
-            val vals = itemNode.get("enum").elements().asScala
-              .map(_.asText()).toSeq
-            elemCheck("enum",
-              e => !try_variant_get(e, "$", "string").isin(vals: _*),
-              _ => lit("does not have a value in the enumeration " +
-                vals.mkString("[", ", ", "]")))
-          }
-          if (itemNode.has("pattern")) {
-            val re = itemNode.get("pattern").asText()
-            elemCheck("pattern", e => jsonType(e) === "string" &&
-              !try_variant_get(e, "$", "string").rlike(re),
-              _ => lit(s"does not match the regex pattern $re"))
-          }
-          if (itemNode.has("minLength")) {
-            val m = itemNode.get("minLength").asInt()
-            elemCheck("minLength", e => jsonType(e) === "string" &&
-              length(try_variant_get(e, "$", "string")) < m,
-              _ => lit(s"must be at least $m characters long"))
-          }
-          if (itemNode.has("minimum")) {
-            val m = itemNode.get("minimum").asDouble()
-            elemCheck("minimum",
-              e => try_variant_get(e, "$", "double") < m,
-              _ => lit("must have a minimum value of " +
-                itemNode.get("minimum").asText()))
-          }
-          if (itemNode.has("maximum")) {
-            val m = itemNode.get("maximum").asDouble()
-            elemCheck("maximum",
-              e => try_variant_get(e, "$", "double") > m,
-              _ => lit("must have a maximum value of " +
-                itemNode.get("maximum").asText()))
-          }
-          // complex item subschemas (nested properties/oneOf/...) fall
-          // back to one whole-subschema violation per failing element
-          if (!itemNode.fieldNames().asScala.forall(scalarItemKeywords)) {
-            checks += Check(ptr, "items", s"$loc/items",
-              env => coalesce(filter(transform(env(aX), (e, i) =>
-                when(!coalesce(validPred(itemNode, e, nextRefDepth),
-                    lit(false)),
-                  viol(concat(lit(ptr + "/"), i.cast("string")), "items",
-                    lit("does not match the items schema"),
-                    s"$loc/items"))),
-                x => x.isNotNull), emptyViol))
-          }
-        }
-        if (node.has("minItems")) {
-          val m = node.get("minItems").asInt()
-          checks += Check(ptr, "minItems", s"$loc/minItems",
-            env => single(env(aX).isNotNull && size(env(aX)) < m,
-              ptr, "minItems", lit(s"must have at least $m items"),
-              s"$loc/minItems"))
-        }
-        if (node.has("maxItems")) {
-          val m = node.get("maxItems").asInt()
-          checks += Check(ptr, "maxItems", s"$loc/maxItems",
-            env => single(env(aX).isNotNull && size(env(aX)) > m,
-              ptr, "maxItems", lit(s"must have at most $m items"),
-              s"$loc/maxItems"))
-        }
-        if (node.has("uniqueItems") && node.get("uniqueItems").asBoolean()) {
-          checks += Check(ptr, "uniqueItems", s"$loc/uniqueItems",
-            env => single(env(aX).isNotNull &&
-                size(array_distinct(transform(env(aX), e => to_json(e))))
-                  =!= size(env(aX)),
-              ptr, "uniqueItems",
-              lit("must have only unique items in the array"),
-              s"$loc/uniqueItems"))
-        }
-        if (node.has("contains")) {
-          val sub = node.get("contains")
-          checks += Check(ptr, "contains", s"$loc/contains",
-            env => single(env(aX).isNotNull && !coalesce(
-                exists(env(aX), e => validPred(sub, e, nextRefDepth)),
-                lit(false)),
-              ptr, "contains",
-              lit("does not contain an element that matches the contains " +
-                "schema"), s"$loc/contains"))
-        }
+        })
       }
-      // ---- combinators over the value at this path ----
-      if (node.has("oneOf")) {
-        val branches = node.get("oneOf").elements().asScala.toSeq
-        checks += Check(ptr, "oneOf", s"$loc/oneOf",
-          env => single(present(env) && branches.map(b =>
-              coalesce(validPred(b, env(vX), nextRefDepth), lit(false))
-                .cast("int")).reduce(_ + _) =!= 1,
-            ptr, "oneOf", lit("must be valid against exactly one schema"),
-            s"$loc/oneOf"))
-      }
-      if (node.has("anyOf")) {
-        val branches = node.get("anyOf").elements().asScala.toSeq
-        checks += Check(ptr, "anyOf", s"$loc/anyOf",
-          env => single(present(env) && !branches.map(b =>
-              coalesce(validPred(b, env(vX), nextRefDepth), lit(false)))
-              .reduce(_ || _),
-            ptr, "anyOf", lit("must be valid against at least one schema"),
-            s"$loc/anyOf"))
-      }
-      if (node.has("allOf")) {
-        val branches = node.get("allOf").elements().asScala.toSeq
-        checks += Check(ptr, "allOf", s"$loc/allOf",
-          env => single(present(env) && !branches.map(b =>
-              coalesce(validPred(b, env(vX), nextRefDepth), lit(false)))
-              .reduce(_ && _),
-            ptr, "allOf", lit("must be valid against all schemas"),
-            s"$loc/allOf"))
-      }
-      if (node.has("not")) {
-        val sub = node.get("not")
-        checks += Check(ptr, "not", s"$loc/not",
-          env => single(present(env) &&
-              coalesce(validPred(sub, env(vX), nextRefDepth), lit(false)),
-            ptr, "not", lit("must not be valid against the schema"),
-            s"$loc/not"))
-      }
-      // ---- additionalProperties (boolean and schema form) ----
-      if (node.has("additionalProperties")) {
-        val ap = node.get("additionalProperties")
-        val declared =
-          if (node.has("properties"))
-            node.get("properties").fieldNames().asScala.toSeq
-          else Seq.empty
-        val mX = ext(p, "map")
-        def isExtra(k: Column) =
-          if (declared.isEmpty) lit(true) else !k.isin(declared: _*)
-        def keyPtr(k: Column) =
-          concat(lit(if (segs.isEmpty) "/" else ptr + "/"), k)
-        if (ap.isBoolean && !ap.asBoolean()) {
-          checks += Check(ptr, "additionalProperties",
-            s"$loc/additionalProperties",
-            env => coalesce(transform(filter(map_keys(env(mX)), k => isExtra(k)),
-              k => viol(keyPtr(k), "additionalProperties",
-                concat(lit("property '"), k, lit("' is not allowed")),
-                s"$loc/additionalProperties")), emptyViol))
-        } else if (!ap.isBoolean) {
-          checks += Check(ptr, "additionalProperties",
-            s"$loc/additionalProperties",
-            env => coalesce(transform(map_keys(map_filter(env(mX),
-                (k, mv) => isExtra(k) && !coalesce(
-                  validPred(ap, mv, nextRefDepth), lit(false)))),
-              k => viol(keyPtr(k), "additionalProperties",
-                concat(lit("property '"), k,
-                  lit("' does not match the additional-properties schema")),
-                s"$loc/additionalProperties")), emptyViol))
+      if (node.has("items")) {
+        val (item, _) = deref(node.get("items"), rd)
+        def perElement(keyword: String, at: String, fails: View => Column,
+            message: View => Column): Unit =
+          checks += Check(ptr, keyword, at, root =>
+            coalesce(filter(transform(root.at(segs).arr, (e, i) =>
+              when(coalesce(fails(View.of(e)), lit(false)),
+                viol(concat(lit(ptr + "/"), i.cast("string")), keyword,
+                  message(View.of(e)), at))),
+              x => x.isNotNull), emptyViol))
+        assertions(item, rd).collect { case (k, t: OnValue) if k.scalar =>
+          perElement(k.name, s"$loc/items/${k.name}", failing(k, t, _),
+            t.message)
         }
+        // an item keyword outside the scalar set: one whole-subschema
+        // violation per failing element
+        if (!item.fieldNames().asScala.forall(scalarKeywords))
+          perElement("items", s"$loc/items",
+            e => !validPred(item, e.value, rd),
+            _ => lit("does not match the items schema"))
       }
       if (node.has("properties")) {
         node.get("properties").fields().asScala.foreach { e =>
-          walk(e.getValue, segs :+ e.getKey, nextRefDepth)
+          walk(e.getValue, segs :+ e.getKey, rd)
         }
       }
     }
 
     walk(root, Seq.empty, 0)
-    CompiledSchema(checks.result(), exts.toSeq)
+    CompiledSchema(checks.result())
   }
 }

@@ -233,6 +233,66 @@ class JsonSchemaSpec extends SparkSpec {
       Seq(("/e", "exclusiveMinimum")))
   }
 
+  test("each keyword gives one verdict as a property, an array item and " +
+      "a oneOf branch, and applies only to its instance types") {
+    // a keyword schema, a conforming value, a violating value, a value of
+    // another type and whether that value is valid: string keywords apply
+    // to strings, numeric keywords to numbers, required to objects,
+    // array keywords to arrays; type/enum/const to every value
+    final case class Case(schema: String, good: String, bad: String,
+        other: String, otherValid: Boolean)
+    val cases = Seq(
+      Case("""{"type":"string"}""", "\"a\"", "5", "null", false),
+      Case("""{"enum":["a","b"]}""", "\"a\"", "\"c\"", "7", false),
+      Case("""{"const":"a"}""", "\"a\"", "\"b\"", "null", false),
+      Case("""{"pattern":"^[a-z]+$"}""", "\"abc\"", "\"ABC\"", "5", true),
+      Case("""{"format":"email"}""", "\"a@b.co\"", "\"nope\"", "5", true),
+      Case("""{"minimum":10}""", "12", "5", "\"5\"", true),
+      Case("""{"maximum":10}""", "5", "12", "\"12\"", true),
+      Case("""{"exclusiveMinimum":10}""", "11", "10", "\"10\"", true),
+      Case("""{"exclusiveMaximum":10}""", "9", "10", "\"10\"", true),
+      Case("""{"multipleOf":3}""", "9", "10", "\"10\"", true),
+      Case("""{"minLength":3}""", "\"abcd\"", "\"ab\"", "5", true),
+      Case("""{"maxLength":3}""", "\"abc\"", "\"abcdef\"", "123456", true),
+      Case("""{"required":["k"]}""", """{"k":1}""", """{"j":1}""", "\"k\"",
+        true),
+      Case("""{"minItems":2}""", "[1,2]", "[1]", "\"ab\"", true))
+    val placements = Seq[(String, String => String, String => String)](
+      ("property", s => s, v => v),
+      ("array item", s => s"""{"items":$s}""", v => s"[$v]"),
+      ("oneOf branch", s => s"""{"oneOf":[$s]}""", v => v))
+    val values = Seq[(String, Case => String)]("conforming" -> (_.good),
+      "violating" -> (_.bad), "other-type" -> (_.other))
+    // one schema per placement, case i under property c<i>; a case's
+    // verdict is whether any violation points at /c<i> or below it
+    val verdicts = placements.map { case (_, schemaOf, valueOf) =>
+      val schema = cases.zipWithIndex.map { case (c, i) =>
+        s""""c$i":${schemaOf(c.schema)}"""
+      }.mkString("""{"type":"object","properties":{""", ",", "}}")
+      val docs = values.map { case (kind, pick) =>
+        kind -> cases.zipWithIndex.map { case (c, i) =>
+          s""""c$i":${valueOf(pick(c))}"""
+        }.mkString("{", ",", "}")
+      }
+      val v = violationsOf(schema, docs: _*)
+      (for ((kind, _) <- values; i <- cases.indices) yield (kind, i) ->
+        !v.getOrElse(kind, Nil).exists(x =>
+          x._1 == s"/c$i" || x._1.startsWith(s"/c$i/"))).toMap
+    }
+    val wrong = for {
+      (kind, _) <- values
+      (c, i) <- cases.zipWithIndex
+      expected = kind match {
+        case "conforming" => true
+        case "violating" => false
+        case _ => c.otherValid
+      }
+      got = placements.map(_._1).zip(verdicts.map(_((kind, i))))
+      if !got.forall(_._2 == expected)
+    } yield s"${c.schema} on the $kind value: valid=$expected, got $got"
+    assert(wrong.isEmpty, wrong.mkString("\n"))
+  }
+
   test("staged withViolations equals the single-Column path") {
     val schema = graft.data.JsonDocs.schema
     val compiled = JsonSchemaCompiler.compile(schema)

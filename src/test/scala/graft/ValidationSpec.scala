@@ -47,8 +47,10 @@ class ValidationSpec extends SparkSpec {
       .orderBy("doc_id").select("doc_id", "valid")
       .as[(String, Boolean)].collect().toSeq
     assert(v === Seq(("f-1", true), ("f-2", false), ("f-3", true)))
-    assert(!Verdicts.runValid(SpanInvariant.verdicts(docs, ref)))
-    assert(Verdicts.runValid(SpanInvariant.verdicts(ref, ref)))
+    def invalidDocs(d: DataFrame) =
+      Verdicts.summary(d).select("invalid_docs").as[Long].head()
+    assert(invalidDocs(SpanInvariant.verdicts(docs, ref)) === 1L)
+    assert(invalidDocs(SpanInvariant.verdicts(ref, ref)) === 0L)
   }
 
   // --- span-count mismatch is a violation ---------------------------------
