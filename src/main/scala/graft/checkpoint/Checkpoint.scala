@@ -17,27 +17,24 @@ import graft.checks.{SpanInvariant, Verdicts}
   *
   * Storage here is a parquet directory. Commit protocol, at BATCH
   * granularity (the file-system stand-in for one Iceberg transaction per
-  * batch): the batch's per-partition results are written to
-  * `<dir>/results` first, then one lineage row per partition is appended
-  * to `<dir>/lineage`. Lineage is the commit marker — a run killed
-  * between the two writes re-processes the whole pending batch on resume
-  * (results are re-written under the new run id), so partitions are never
-  * marked done without stored results. On Iceberg, results + lineage land
-  * in one atomic commit and snapshot-id watermarks replace the run id.
+  * batch): one write, the append of one lineage row per partition to
+  * `<dir>/lineage`. The lineage row is the partition's result and its
+  * commit. A file-system append commits per output file, so a run killed
+  * inside the append can mark some partitions done, each with a complete
+  * row; the rest stay pending and re-run on resume. A lineage path that
+  * is not a directory holds no commit: the run validates every partition
+  * and fails at the append. On Iceberg, the append is one atomic commit
+  * and snapshot-id watermarks replace the run id.
   */
 object Checkpoint {
 
   final case class Lineage(run_id: String, part: String, docs: Long,
       invalid_docs: Long, violations: Long, completed_at_ms: Long)
 
-  final case class ResultRow(run_id: String, part: String, valid: Boolean,
-      docs: Long, invalid_docs: Long, violations: Long)
-
   private def lineagePath(dir: String) = s"$dir/lineage"
-  private def resultsPath(dir: String) = s"$dir/results"
 
   def processedParts(spark: SparkSession, dir: String): Set[String] = {
-    if (!Files.exists(Paths.get(lineagePath(dir)))) return Set.empty
+    if (!Files.isDirectory(Paths.get(lineagePath(dir)))) return Set.empty
     spark.read.parquet(lineagePath(dir))
       .select("part").distinct().collect().map(_.getString(0)).toSet
   }
@@ -46,11 +43,10 @@ object Checkpoint {
     spark.read.parquet(lineagePath(dir))
 
   /** Validate only partitions not yet in the checkpoint; commit the
-    * batch's results, then its lineage rows (see the commit protocol
-    * above). Returns this run's per-partition verdicts as the rows it
-    * committed, in a local frame — stable under caller reuse (no lazy
-    * recompute of the validation after commit); empty when everything is
-    * already processed.
+    * batch's lineage rows (see the commit protocol above). Returns this
+    * run's per-partition verdicts as the rows it committed, in a local
+    * frame — stable under caller reuse (no lazy recompute of the
+    * validation after commit); empty when everything is already processed.
     */
   def runIncremental(docs: DataFrame, ref: DataFrame, dir: String,
       runId: String): DataFrame = {
@@ -66,13 +62,6 @@ object Checkpoint {
     val committed = spark.createDataFrame(rows.toSeq.asJava, perPart.schema)
     if (rows.isEmpty) return committed
     val now = System.currentTimeMillis()
-    // 1. results (the data) ...
-    rows.map { r =>
-      ResultRow(runId, r.getAs[String]("part"), r.getAs[Boolean]("valid"),
-        r.getAs[Long]("docs"), r.getAs[Long]("invalid_docs"),
-        r.getAs[Long]("violations"))
-    }.toSeq.toDF().write.mode(SaveMode.Append).parquet(resultsPath(dir))
-    // 2. ... then lineage (the commit marker)
     rows.map { r =>
       Lineage(runId, r.getAs[String]("part"), r.getAs[Long]("docs"),
         r.getAs[Long]("invalid_docs"), r.getAs[Long]("violations"), now)

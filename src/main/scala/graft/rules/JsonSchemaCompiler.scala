@@ -38,6 +38,8 @@ import org.apache.spark.sql.functions._
   * serves a value at a path (`present && applies && fails`), each array
   * element under `items` and a value inside a subschema (`oneOf`, `not`,
   * `contains`, `additionalProperties`), so the three placements agree.
+  * The span rules ([[RuleCompiler]]) lower to nodes of the same table,
+  * placed at a path over a typed span struct ([[View.typed]]).
   *
   * Evaluation has two entry points:
   *  - `violations(v)`: a single Column over a variant — convenient, but
@@ -80,6 +82,15 @@ object JsonSchemaCompiler {
     catch { case _: Exception => yamlMapper.readTree(text) }
   }
 
+  /** The node at the fragment path `frag` (`#/` stripped) below `root`;
+    * a missing one is an [[UnsupportedRefException]] for `ref`.
+    */
+  private def fragment(root: JsonNode, frag: String, ref: String): JsonNode =
+    Option(frag.split('/').foldLeft(root)((n, seg) =>
+      if (n == null) null else n.get(seg))).getOrElse(
+      throw new UnsupportedRefException(
+        s"Reference $ref cannot be resolved: fragment not found"))
+
   /** Inline relative-FILE `$ref`s (NetworkNT resolves these against the
     * schema's own location) before compilation, so the compiled document
     * is self-contained and the existing intra-document machinery applies
@@ -100,14 +111,9 @@ object JsonSchemaCompiler {
         if (!external) node
         else if (budget <= 0) mapper.createObjectNode()
         else {
-          val target = o.get("$ref").asText().stripPrefix("#/")
-            .split('/').foldLeft(docRoot)((n, seg) =>
-              if (n == null) null else n.get(seg))
-          if (target == null)
-            throw new UnsupportedRefException(
-              s"Reference ${o.get("$ref").asText()} cannot be resolved " +
-                "in the referenced document")
-          inlineFileRefs(target, docRoot, dir, budget - 1, external = true)
+          val ref = o.get("$ref").asText()
+          inlineFileRefs(fragment(docRoot, ref.stripPrefix("#/"), ref),
+            docRoot, dir, budget - 1, external = true)
         }
       case o: ObjectNode if o.has("$ref") =>
         val ref = o.get("$ref").asText()
@@ -127,12 +133,8 @@ object JsonSchemaCompiler {
             }
           val target = frag.stripPrefix("#").stripPrefix("/") match {
             case "" => extRoot
-            case path => path.split('/').foldLeft(extRoot)((n, seg) =>
-              if (n == null) null else n.get(seg))
+            case path => fragment(extRoot, path, ref)
           }
-          if (target == null)
-            throw new UnsupportedRefException(
-              s"Reference $ref cannot be resolved: fragment not found")
           inlineFileRefs(target, extRoot, p.getParent, budget - 1,
             external = true)
         }
@@ -157,6 +159,12 @@ object JsonSchemaCompiler {
 
   private def emptyViol: Column = array().cast(ViolationType)
 
+  /** One violation struct, an element of [[ViolationType]]. */
+  private[rules] def viol(ptrCol: Column, keyword: String, msg: Column,
+      loc: String): Column =
+    struct(ptrCol.as("pointer"), lit(keyword).as("keyword"),
+      msg.as("message"), lit(loc).as("schemaLocation"))
+
   /** One extraction a keyword reads: a JSON path plus how to read it.
     * mode ∈ {variant, typeof, string, double, array, map}.
     */
@@ -166,9 +174,10 @@ object JsonSchemaCompiler {
     * Column for an extraction whose path is relative to the value (`$` is
     * the value itself). At a path the reads are `withViolations`' staged
     * extractions; an array element or a subschema's value is read
-    * straight from its variant ([[View.of]]).
+    * straight from its variant ([[View.of]]); a typed column is read as
+    * itself ([[View.typed]]).
     */
-  final class View(val read: Ext => Column) {
+  class View(val read: Ext => Column) {
     def value: Column = read(Ext("$", "variant"))
     def jsonType: Column = read(Ext("$", "typeof"))
     def str: Column = read(Ext("$", "string"))
@@ -185,6 +194,23 @@ object JsonSchemaCompiler {
 
   object View {
     def of(v: Column): View = new View(directExpr(v, _))
+
+    /** A typed (not variant) column `c`: `str` is `c`, `num` its cast to
+      * double, `field` its struct field, `jsonType` "null" for NULL, else
+      * the JSON type of its Catalyst type (Spark's `typeof` is foldable:
+      * a type guard folds to a null test). A NULL struct field is an
+      * absent key, so only a `required` of the enclosing struct fires.
+      */
+    def typed(c: Column): View = new View(e => {
+      require(e.path == "$", s"a typed view reads only itself, not ${e.path}")
+      e.mode match {
+        case "typeof" => jsonType(c.isNull, upper(typeof(c)))
+        case "double" => c.cast("double")
+        case _ => c
+      }
+    }) {
+      override def field(name: String): Column = c.getField(name)
+    }
   }
 
   /** One compiled check: over a view of the document root, emits an
@@ -194,20 +220,18 @@ object JsonSchemaCompiler {
   final case class Check(pointer: String, keyword: String,
       schemaLocation: String, emit: View => Column)
 
-  /** Map a schema_of_variant type string to the JSON-Schema type name.
-    * Call only on non-SQL-null variants (missing keys are handled by the
-    * presence guard); an explicit JSON null is VOID → "null".
+  /** The JSON-Schema type name of a value whose upper-case Spark type
+    * name is `t`: "null" when `isNull` or for VOID (an explicit JSON null
+    * in a variant, whose type string is `schema_of_variant`'s).
     */
-  def jsonType(sub: Column): Column = {
-    val t = schema_of_variant(sub)
-    when(sub.isNull || t === "VOID", "null")
+  def jsonType(isNull: Column, t: Column): Column =
+    when(isNull || t === "VOID", "null")
       .when(t.isin("BIGINT", "INT", "SMALLINT", "TINYINT"), "integer")
       .when(t.startsWith("DECIMAL") || t.isin("DOUBLE", "FLOAT"), "number")
       .when(t === "STRING", "string")
       .when(t === "BOOLEAN", "boolean")
       .when(t.startsWith("ARRAY"), "array")
       .otherwise("object")
-  }
 
   private def pathSeg(s: String): String =
     if (s.matches("[A-Za-z0-9_]+")) s".$s" else s"['$s']"
@@ -221,7 +245,8 @@ object JsonSchemaCompiler {
   /** Evaluate one extraction directly over a variant root. */
   private def directExpr(v: Column, e: Ext): Column = e.mode match {
     case "typeof" =>
-      jsonType(if (e.path == "$") v else try_variant_get(v, e.path, "variant"))
+      val sub = if (e.path == "$") v else try_variant_get(v, e.path, "variant")
+      jsonType(sub.isNull, schema_of_variant(sub))
     case "variant" if e.path == "$" => v
     case "array" => try_variant_get(v, e.path, "array<variant>")
     case "map" => try_variant_get(v, e.path, "map<string,variant>")
@@ -405,12 +430,36 @@ object JsonSchemaCompiler {
   private def failing(k: Keyword, t: Test, v: View): Column =
     k.appliesTo(v).fold(t.fails(v))(_ && t.fails(v))
 
+  /** The assertions `node` makes, in table order; `sub` checks its
+    * subschemas.
+    */
+  private def assertions(node: JsonNode, sub: Sub): Seq[(Keyword, Test)] =
+    keywords.filter(k => node.has(k.name))
+      .flatMap(k => k.tests(node, sub).map(k -> _))
+
+  /** Whether test `t` of keyword `k` fails at a path; never NULL. A NULL
+    * value is an absent key: nothing fires on it.
+    */
+  private def failsAt(k: Keyword, t: Test, v: View): Column =
+    coalesce(v.value.isNotNull && failing(k, t, v), lit(false))
+
+  /** The value assertions of `node`, a schema with no subschema, at the
+    * path `v` reads, as (keyword, fails, message): the span rules' form
+    * ([[RuleCompiler.violations]]).
+    */
+  private[rules] def atPath(node: JsonNode, v: View) =
+    assertions(node, (s, _) => throw new IllegalArgumentException(
+      s"a subschema needs a compiled schema: $s"))
+      .collect { case (k, t: OnValue) =>
+        (k.name, failsAt(k, t, v), t.message(v)) }
+
   final case class CompiledSchema(checks: Seq[Check]) {
 
     /** Every (path, mode) a check reads, in first-read order: the
-      * extractions `withViolations` stages.
+      * extractions `withViolations` stages. Recorded at construction, so
+      * an unresolvable `$ref` in a subschema fails the compile.
       */
-    lazy val exts: Seq[Ext] = {
+    val exts: Seq[Ext] = {
       val seen = scala.collection.mutable.LinkedHashSet.empty[Ext]
       checks.foreach(_.emit(new View(e => { seen += e; lit(null) })))
       seen.toSeq
@@ -490,21 +539,13 @@ object JsonSchemaCompiler {
         throw new UnsupportedRefException(
           s"Reference $ref cannot be resolved: only intra-document " +
             "'#/' refs are supported")
-      ref.stripPrefix("#/").split('/')
-        .foldLeft(root)((n, seg) => n.get(seg))
+      fragment(root, ref.stripPrefix("#/"), ref)
     }
 
     /** `node` with its `$ref` resolved, and the `$ref` depth below it. */
     def deref(node: JsonNode, refDepth: Int): (JsonNode, Int) =
       if (node.has("$ref")) (resolveRef(node), refDepth + 1)
       else (node, refDepth)
-
-    /** The assertions `node` makes, in table order; its subschemas are
-      * checked at `$ref` depth `rd`.
-      */
-    def assertions(node: JsonNode, rd: Int): Seq[(Keyword, Test)] =
-      keywords.filter(k => node.has(k.name))
-        .flatMap(k => k.tests(node, validPred(_, _, rd)).map(k -> _))
 
     // ---- subschema satisfaction predicate (for oneOf/not/items/
     // additionalProperties — anywhere a whole subschema applies to one
@@ -514,7 +555,7 @@ object JsonSchemaCompiler {
       if (refDepth > maxRefDepth) return lit(true) // bounded unrolling
       val (node, rd) = deref(node0, refDepth)
       val value = View.of(v)
-      val holds = assertions(node, rd).map { case (k, t) =>
+      val holds = assertions(node, validPred(_, _, rd)).map { case (k, t) =>
         !coalesce(failing(k, t, value), lit(false))
       } ++ Option(node.get("properties")).toSeq
         .flatMap(_.fields().asScala).map { e =>
@@ -526,11 +567,6 @@ object JsonSchemaCompiler {
       holds.reduceOption(_ && _).getOrElse(lit(true))
     }
 
-    def viol(ptrCol: Column, keyword: String, msg: Column,
-        loc: String): Column =
-      struct(ptrCol.as("pointer"), lit(keyword).as("keyword"),
-        msg.as("message"), lit(loc).as("schemaLocation"))
-
     // ---- the walk: each assertion at each path, then per element ------
     def walk(node0: JsonNode, segs: Seq[String], refDepth: Int): Unit = {
       if (refDepth > maxRefDepth) return // bounded unrolling
@@ -541,17 +577,17 @@ object JsonSchemaCompiler {
       def keyPtr(k: Column) =
         concat(lit(if (segs.isEmpty) "/" else ptr + "/"), k)
 
-      assertions(node, rd).foreach { case (k, t) =>
+      assertions(node, validPred(_, _, rd)).foreach { case (k, t) =>
         val at = s"$loc/${k.name}"
         checks += Check(ptr, k.name, at, root => {
           val v = root.at(segs)
-          val present = v.value.isNotNull
           t match {
             case OnValue(_, message) =>
-              when(coalesce(present && failing(k, t, v), lit(false)),
+              when(failsAt(k, t, v),
                 array(viol(lit(ptr), k.name, message(v), at)))
                 .otherwise(emptyViol)
             case OnKeys(keys, message) =>
+              val present = v.value.isNotNull
               when(k.appliesTo(v).fold(present)(present && _),
                 transform(keys(v),
                   key => viol(keyPtr(key), k.name, message(key), at)))
@@ -568,9 +604,10 @@ object JsonSchemaCompiler {
                 viol(concat(lit(ptr + "/"), i.cast("string")), keyword,
                   message(View.of(e)), at))),
               x => x.isNotNull), emptyViol))
-        assertions(item, rd).collect { case (k, t: OnValue) if k.scalar =>
-          perElement(k.name, s"$loc/items/${k.name}", failing(k, t, _),
-            t.message)
+        assertions(item, validPred(_, _, rd)).collect {
+          case (k, t: OnValue) if k.scalar =>
+            perElement(k.name, s"$loc/items/${k.name}", failing(k, t, _),
+              t.message)
         }
         // an item keyword outside the scalar set: one whole-subschema
         // violation per failing element

@@ -1,123 +1,95 @@
 package graft.rules
 
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.JsonNodeFactory.{instance => json}
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** JSON-Schema-style rule ADT over span documents, compiled to pure
-  * Catalyst `Column` trees (whole-stage-codegen'd; zero UDFs).
-  *
-  * The reference delegates keyword evaluation to NetworkNT
-  * (`schema.validate(...)`, YamlSchemaValidator.java:138-140); here each
-  * span keyword (`enum`, `required`, `pattern`, `minimum`/`maximum`,
-  * `minLength`) compiles to a predicate over a span struct, and a failed
-  * keyword yields a violation struct `{pointer, keyword, message,
-  * schemaLocation}` mirroring the NetworkNT OutputUnit detail shape
-  * (testreport/invalidyaml.json:6-14). The CLI's full keyword surface
-  * (`type`, `not`, `oneOf`, `contains`, ...) is [[JsonSchemaCompiler]].
+import graft.rules.JsonSchemaCompiler.View
+
+/** Span rules: plain data naming a JSON-Schema keyword, the span field it
+  * constrains and its bound. Their semantics are [[JsonSchemaCompiler]]'s
+  * keyword table's: [[RuleCompiler.violations]] lowers each rule to
+  * keyword nodes and places them at a path over the span struct, so the
+  * failure test, the null handling and the message of each keyword are
+  * defined once, in that table. A failed keyword yields a violation struct
+  * `{pointer, keyword, message, schemaLocation}` mirroring the NetworkNT
+  * OutputUnit detail shape (testreport/invalidyaml.json:6-14). The fused
+  * kernel ([[graft.functions.RuleCounter]]) is the compiled form of the
+  * same rules, pinned against the lowering by FunctionsSpec.
   */
-sealed trait SpanRule {
-  def field: String
-  def keyword: String
-  def schemaLocation: String =
-    s"#/properties/spans/items/properties/$field/$keyword"
-
-  /** Predicate: TRUE means the span VIOLATES this rule. `span` is the span
-    * struct Column, `i1` the 1-based span index.
-    */
-  def violated(span: Column, i1: Column): Column
-
-  /** Failure message; NetworkNT-flavored phrasing. */
-  def message(span: Column, i1: Column): Column
-}
+sealed trait SpanRule { def field: String }
 
 /** `enum` — value must be one of `allowed` (sample-schema.json:8-26). */
 final case class EnumRule(field: String, allowed: Seq[String])
-    extends SpanRule {
-  val keyword = "enum"
-  def violated(span: Column, i1: Column): Column = {
-    val v = span.getField(field)
-    v.isNotNull && !v.isin(allowed: _*)
-  }
-  def message(span: Column, i1: Column): Column =
-    lit(s"does not have a value in the enumeration " +
-      allowed.mkString("[", ", ", "]"))
-}
+    extends SpanRule
 
 /** `required` — field must be present (non-null), optionally only when
   * `kind` equals `whenKind` (FilesOutputToLlmTest.java:73-76 exercises
   * `required`).
   */
 final case class RequiredRule(field: String, whenKind: Option[String] = None)
-    extends SpanRule {
-  val keyword = "required"
-  def violated(span: Column, i1: Column): Column = {
-    val missing = span.getField(field).isNull
-    whenKind.fold(missing)(k => span.getField("kind") === k && missing)
-  }
-  def message(span: Column, i1: Column): Column =
-    lit(s"required property '$field' not found")
-}
+    extends SpanRule
 
 /** `pattern` — string must match regex (sample-schema.json:1451-1453). */
-final case class PatternRule(field: String, regex: String) extends SpanRule {
-  val keyword = "pattern"
-  def violated(span: Column, i1: Column): Column = {
-    val v = span.getField(field)
-    v.isNotNull && !v.rlike(regex)
-  }
-  def message(span: Column, i1: Column): Column =
-    lit(s"does not match the regex pattern $regex")
-}
+final case class PatternRule(field: String, regex: String) extends SpanRule
 
-/** `minimum` / `maximum` on a numeric field (sample-schema.json:1421-1437). */
+/** `minimum` / `maximum` on a numeric field (sample-schema.json:1421-1437).
+  * With `min <= max` a value breaks at most one bound, as the kernel counts.
+  */
 final case class RangeRule(field: String, min: Option[Long], max: Option[Long])
-    extends SpanRule {
-  val keyword = if (min.isDefined) "minimum" else "maximum"
-  def violated(span: Column, i1: Column): Column = {
-    val v = span.getField(field)
-    val lo = min.map(m => v < lit(m)).getOrElse(lit(false))
-    val hi = max.map(m => v > lit(m)).getOrElse(lit(false))
-    v.isNotNull && (lo || hi)
-  }
-  def message(span: Column, i1: Column): Column = (min, max) match {
-    case (Some(m), _) => lit(s"must have a minimum value of $m")
-    case (_, Some(m)) => lit(s"must have a maximum value of $m")
-    case _ => lit("")
-  }
-}
+    extends SpanRule
 
 /** `minLength` on a string field (sample-schema.json:1964-1966). */
-final case class MinLengthRule(field: String, minLen: Int) extends SpanRule {
-  val keyword = "minLength"
-  def violated(span: Column, i1: Column): Column = {
-    val v = span.getField(field)
-    v.isNotNull && length(v) < minLen
-  }
-  def message(span: Column, i1: Column): Column =
-    lit(s"must be at least $minLen characters long")
-}
+final case class MinLengthRule(field: String, minLen: Int) extends SpanRule
 
 object RuleCompiler {
+  /** Rule `r` on span `s` as keyword nodes, each with the value it
+    * constrains and its gate: `required` constrains the span struct, gated
+    * on `kind = whenKind`; every other keyword constrains the span's
+    * `r.field`. A [[RangeRule]] lowers to a `minimum` and/or a `maximum`
+    * node. Bounds stay integer nodes, so messages read `0`, not `0.0`.
+    */
+  private def lower(r: SpanRule, s: Column): Seq[(JsonNode, View, Column)] = {
+    def on(keyword: String, bound: JsonNode) =
+      (json.objectNode().set[JsonNode](keyword, bound),
+        View.typed(s.getField(r.field)), lit(true))
+    r match {
+      case EnumRule(_, allowed) =>
+        val members = json.arrayNode()
+        allowed.foreach(a => members.add(a))
+        Seq(on("enum", members))
+      case RequiredRule(field, whenKind) =>
+        Seq((json.objectNode().set[JsonNode]("required",
+          json.arrayNode().add(field)), View.typed(s),
+          whenKind.fold(lit(true))(s.getField("kind") === _)))
+      case PatternRule(_, regex) => Seq(on("pattern", json.textNode(regex)))
+      case RangeRule(_, min, max) =>
+        min.map(m => on("minimum", json.numberNode(m))).toSeq ++
+          max.map(m => on("maximum", json.numberNode(m)))
+      case MinLengthRule(_, minLen) =>
+        Seq(on("minLength", json.numberNode(minLen)))
+    }
+  }
+
   /** Compile a rule set into one Column producing
     * `array<struct<pointer, keyword, message, schemaLocation>>` of all
-    * violations in the document's spans. One pass over the array, fully
-    * codegen'd — the Spark analogue of NetworkNT's single-walk LIST output.
+    * violations in the document's spans, span by span and rule by rule:
+    * the Spark analogue of NetworkNT's single-walk LIST output.
     */
-  def violations(spans: Column, rules: Seq[SpanRule]): Column = {
-    val perSpan = transform(spans, (s, i0) => {
-      val i1 = i0 + 1
-      val checks = rules.map { r =>
-        when(r.violated(s, i1), struct(
-          concat(lit("/spans/"), i0.cast("string"), lit("/" + r.field))
-            .as("pointer"),
-          lit(r.keyword).as("keyword"),
-          r.message(s, i1).as("message"),
-          lit(r.schemaLocation).as("schemaLocation")))
-      }
+  def violations(spans: Column, rules: Seq[SpanRule]): Column =
+    flatten(transform(spans, (s, i0) => {
+      val checks = for {
+        r <- rules
+        (node, value, gate) <- lower(r, s)
+        (keyword, fails, message) <- JsonSchemaCompiler.atPath(node, value)
+      } yield when(gate && fails, JsonSchemaCompiler.viol(
+        concat(lit("/spans/"), i0.cast("string"), lit("/" + r.field)),
+        keyword, message,
+        s"#/properties/spans/items/properties/${r.field}/$keyword"))
       filter(array(checks: _*), v => v.isNotNull)
-    })
-    flatten(perSpan)
-  }
+    }))
 
   /** Default rule set for the interleaved-docs domain. */
   val docRules: Seq[SpanRule] = Seq(

@@ -216,14 +216,13 @@ class FunctionsSpec extends SparkSpec {
     * never makes, for the kernel-vs-HOF tests: a length mismatch each way
     * (the extra docs-side span breaks benchRules), a null reference-side
     * element, and each of kind, text, media_ref and offset null on one
-    * side. `docsNullElement` adds a null docs-side element, on which the
-    * forms agree only under rules that a null span cannot violate (no
-    * rules, docRules).
+    * side. `docsNullElement` adds a null docs-side element, which violates
+    * no rule in either form: a null span is no object, so not even an
+    * unconditional `required` fires on it.
     *
-    * Left out, because the HOF forms and the kernel disagree on them
-    * today (ROADMAP item 1): a null element on both sides, a docs-side
-    * null element under benchRules' unconditional `required` rules, and
-    * a null `spans` array.
+    * Left out, because the HOF mismatch form and the kernel disagree on
+    * them today (ROADMAP item 1): a null element on both sides, and a
+    * null `spans` array.
     */
   private def spanEdgePairs(docsNullElement: Boolean): DataFrame = {
     val txt = Row("text", "hello", null, 0)
@@ -280,9 +279,7 @@ class FunctionsSpec extends SparkSpec {
 
   test("SpanVerdictCount self-join rule count ≡ HOF rule compiler count") {
     // a self-join has no mismatches, so the fused kernel over (spans,
-    // spans) counts rule violations only. No input here has a null span
-    // element: the kernel skips one, while the HOF compiler's
-    // unconditional `required` rules flag it
+    // spans) counts rule violations only
     def ruleCount(rules: Seq[SpanRule]): Column =
       graft.functions.SpanVerdictCount.spanVerdictCount(col("spans"),
         col("spans"), rules)
@@ -321,6 +318,23 @@ class FunctionsSpec extends SparkSpec {
         RuleCompiler.benchRules)).as("hof"),
       ruleCount(RuleCompiler.benchRules).as("fast"))
     assert(adv.filter(col("hof") =!= col("fast")).count() === 0)
+    // a RangeRule with both bounds is labelled by the bound it breaks
+    val range = Seq(RangeRule("offset", Some(0), Some(7)))
+    val offsets = Seq(("lo", -1), ("hi", 99)).toDF("doc_id", "o")
+      .select(col("doc_id"), array(struct(lit("text").as("kind"),
+        lit("x").as("text"), lit(null).cast("string").as("media_ref"),
+        col("o").as("offset"))).as("spans"))
+    val labels = offsets.select(col("doc_id"),
+        explode(RuleCompiler.violations(col("spans"), range)).as("v"))
+      .select("doc_id", "v.keyword", "v.message")
+      .as[(String, String, String)].collect().toSet
+    assert(labels === Set(
+      ("lo", "minimum", "must have a minimum value of 0"),
+      ("hi", "maximum", "must have a maximum value of 7")))
+    val rangeCounts = offsets.select(
+      size(RuleCompiler.violations(col("spans"), range)).as("hof"),
+      ruleCount(range).as("fast")).as[(Int, Int)].collect().toSeq
+    assert(rangeCounts === Seq((1, 1), (1, 1)))
   }
 
   test("fused SpanVerdictCount ≡ HOF mismatches + HOF rule violations") {
@@ -343,7 +357,7 @@ class FunctionsSpec extends SparkSpec {
       RuleCompiler.benchRules)
     assert(both.filter(col("fused") =!= col("hof")).count() === 0)
     assert(both.filter(col("fused") > 0).count() > 0)
-    for (rules <- Seq(Nil, RuleCompiler.docRules)) {
+    for (rules <- Seq(Nil, RuleCompiler.docRules, RuleCompiler.benchRules)) {
       val edges = fusedVsHof(spanEdgePairs(docsNullElement = true), rules)
       assert(edges.filter(col("fused") =!= col("hof")).count() === 0)
     }

@@ -94,6 +94,17 @@ class JsonSchemaSpec extends SparkSpec {
       compiled.checks.size < 50)
   }
 
+  test("a missing #/ fragment is an UnsupportedRefException at compile " +
+      "time, as a property and inside a subschema") {
+    for (p <- Seq("""{"$ref":"#/$defs/nope"}""",
+        """{"not":{"$ref":"#/$defs/nope"}}""")) {
+      val e = intercept[JsonSchemaCompiler.UnsupportedRefException](
+        JsonSchemaCompiler.compile(s"""{"properties":{"p":$p}}"""))
+      assert(e.getMessage ===
+        "Reference #/$defs/nope cannot be resolved: fragment not found")
+    }
+  }
+
   test("missing properties are not violations (only required enforces)") {
     val schema =
       """{"type":"object","properties":{"x":{"type":"integer"}}}"""

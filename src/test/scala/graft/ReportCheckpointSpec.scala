@@ -112,4 +112,29 @@ class ReportCheckpointSpec extends SparkSpec {
     assert(lineage === cold)
     assert(Checkpoint.lineage(spark, dir).count() === 20)
   }
+
+  test("checkpoint: a failed lineage append commits nothing; resume " +
+      "processes every pending partition once") {
+    val dir = Files.createTempDirectory("graft-ckpt-fail").toString
+    val documents = Tables.documents(spark, "/root/testdata/sf0.001")
+    val docs = Interleaved.docs(documents)
+    val ref = Interleaved.referenceSpans(documents)
+    def counts(df: org.apache.spark.sql.DataFrame) =
+      df.select("part", "docs", "invalid_docs", "violations")
+        .as[(String, Long, Long, Long)].collect().toSeq.sortBy(_._1)
+
+    // a plain file at the lineage path makes the append fail
+    val blocker = java.nio.file.Paths.get(dir, "lineage")
+    Files.writeString(blocker, "not a lineage table")
+    intercept[Exception](Checkpoint.runIncremental(docs, ref, dir, "run1"))
+    assert(Checkpoint.processedParts(spark, dir).isEmpty)
+
+    Files.delete(blocker)
+    val resumed = Checkpoint.runIncremental(docs, ref, dir, "run2")
+    assert(resumed.count() === 20)
+    val lineage = counts(Checkpoint.lineage(spark, dir))
+    assert(lineage.map(_._1).distinct.size === lineage.size)
+    assert(lineage ===
+      counts(Verdicts.perPartition(SpanInvariant.verdicts(docs, ref))))
+  }
 }

@@ -452,11 +452,17 @@ class ValidateCliSpec extends SparkSpec {
     Files.writeString(d.resolve("doc.yaml"),
       "$schema: ./remote-ref.json\nk: 1\n")
     Files.writeString(d.resolve("ok.yaml"), "$schema: ./remote-ref.json2\n")
+    // a `#/` fragment that is not there: the same error row, no NPE
+    Files.writeString(d.resolve("missing-frag.json"),
+      """{"type":"object","properties":{"p":{"$ref":"#/$defs/nope"}}}""")
+    Files.writeString(d.resolve("frag.yaml"),
+      "$schema: ./missing-frag.json\np: 1\n")
     val (rows, summary) = Validate.runFull(spark,
-      Seq(d.resolve("doc.yaml").toString), schema = None,
-      autoDetect = false)
-    assert(summary.docs === 1 && !summary.allValid)
-    assert(rows.head.errors.head._2.contains("cannot be resolved"))
+      Seq("doc.yaml", "frag.yaml").map(d.resolve(_).toString),
+      schema = None, autoDetect = false)
+    assert(summary.docs === 2 && summary.invalidDocs === 2)
+    assert(rows.size === 2 &&
+      rows.forall(_.errors.head._2.contains("cannot be resolved")))
   }
 
   test("runFull evaluates its compiled schemas once: no report action " +
