@@ -30,19 +30,11 @@ import graft.sources.YamlSource
   */
 object Validate {
 
-  /** Schema file may be JSON or YAML (reference P5,
-    * getSchemaYamlJsonNode YamlSchemaValidator.java:224-240).
+  /** The schema file at `path`, JSON or YAML, as JSON text
+    * ([[JsonSchemaCompiler.readSchemaDoc]]).
     */
-  def readSchema(path: String): String = {
-    val text = Files.readString(Paths.get(path))
-    val jsonMapper = new ObjectMapper()
-    try { jsonMapper.readTree(text); text }
-    catch {
-      case _: Exception =>
-        val yamlMapper = new ObjectMapper(new YAMLFactory())
-        jsonMapper.writeValueAsString(yamlMapper.readTree(text))
-    }
-  }
+  def readSchema(path: String): String = new ObjectMapper()
+    .writeValueAsString(JsonSchemaCompiler.readSchemaDoc(Paths.get(path)))
 
   /** Spec-compat entry: one mandatory schema, files only. */
   def run(spark: SparkSession, files: Seq[String], schemaPath: String)

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.checks.{SpanInvariant, Verdicts}
@@ -33,14 +33,18 @@ object Checkpoint {
 
   private def lineagePath(dir: String) = s"$dir/lineage"
 
+  /** Partitions with committed lineage. Lineage holds one row per
+    * partition per run, so the parts dedup on the driver.
+    */
   def processedParts(spark: SparkSession, dir: String): Set[String] = {
     if (!Files.isDirectory(Paths.get(lineagePath(dir)))) return Set.empty
-    spark.read.parquet(lineagePath(dir))
-      .select("part").distinct().collect().map(_.getString(0)).toSet
+    lineage(spark, dir).select("part").collect().map(_.getString(0)).toSet
   }
 
+  /** The lineage table, read with [[Lineage]]'s schema (no inference). */
   def lineage(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(lineagePath(dir))
+    spark.read.schema(Encoders.product[Lineage].schema)
+      .parquet(lineagePath(dir))
 
   /** Validate only partitions not yet in the checkpoint; commit the
     * batch's lineage rows (see the commit protocol above). Returns this

@@ -1,5 +1,9 @@
 package graft.report
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
+import com.fasterxml.jackson.dataformat.yaml.{YAMLGenerator, YAMLMapper}
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -19,15 +23,6 @@ object Reports {
   private def xmlEscape(s: String): String =
     s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
       .replace("\"", "&quot;")
-
-  private def jsonEscape(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
 
   /** One NetworkNT-LIST-style detail (golden invalidyaml.json:6-14):
     * subschema evaluation path, absolute schema location ($id + fragment),
@@ -117,11 +112,25 @@ object Reports {
       r.details.flatMap(d =>
         d.errors.map { case (k, m) => (d.instanceLocation, k, m) })
 
+  /** The line saying that [[gather]] cut rows, when it did: fewer rows
+    * than the summary's documents, or fewer violations in the rows than
+    * the summary counts.
+    */
+  private def cutNote(rows: Seq[VerdictRow], summary: RunSummary)
+      : Option[String] = {
+    val shown = rows.map(flatViolations(_).size.toLong).sum
+    if (rows.size < summary.docs || shown < summary.violations)
+      Some(s"(showing ${rows.size} of ${summary.docs} documents and " +
+        s"$shown of ${summary.violations} violations)")
+    else None
+  }
+
   // ---------------------------------------------------------------------
   // TEXT — byte-exact vs testreport/*.txt (FilesOutput.toColoredString):
   // "Validation Result:" header, per-doc ok/invalid, top-level errors as
   // " label: message", details as " Details:\n Path:\n Schema:\n kw: msg".
   // `color` wraps verdicts in Spring AnsiColor GREEN/RED..DEFAULT (39).
+  // A report of cut rows ends with the cut note.
   // ---------------------------------------------------------------------
   def renderText(rows: Seq[VerdictRow], summary: RunSummary,
       color: Boolean = false): String = {
@@ -148,116 +157,70 @@ object Reports {
         }
       }
     }
+    cutNote(rows, summary).foreach(sb.append(_).append('\n'))
     sb.toString
   }
 
-  // ---------------------------------------------------------------------
-  // Minimal JSON document model + a writer reproducing Jackson's
-  // DefaultPrettyPrinter line-break placement (objects expand one field
-  // per line with " : "; arrays stay inline with ", "; empty: "{ }"/"[ ]")
-  // so JSON/SARIF output diffs cleanly against the reference goldens.
-  // ---------------------------------------------------------------------
-  private sealed trait J
-  private final case class JObj(fields: Seq[(String, J)]) extends J
-  private final case class JArr(items: Seq[J]) extends J
-  private final case class JStr(v: String) extends J
-  private final case class JBool(v: Boolean) extends J
-  private final case class JInt(v: Long) extends J
+  private val jsonMapper = new ObjectMapper()
+  private val jsonPretty = jsonMapper.writerWithDefaultPrettyPrinter()
+  // Jackson folds a string longer than 80 columns onto a second line by
+  // default; the reference's YAML reports keep each value on its line
+  private val yamlMapper = YAMLMapper.builder()
+    .disable(YAMLGenerator.Feature.SPLIT_LINES).build()
 
-  private def writeJ(j: J, sb: StringBuilder, indent: Int): Unit = j match {
-    case JStr(s) => sb.append('"').append(jsonEscape(s)).append('"')
-    case JBool(b) => sb.append(b.toString)
-    case JInt(n) => sb.append(n.toString)
-    case JObj(Seq()) => sb.append("{ }")
-    case JObj(fs) =>
-      sb.append("{\n")
-      fs.zipWithIndex.foreach { case ((k, v), i) =>
-        sb.append("  " * (indent + 1)).append('"').append(jsonEscape(k))
-          .append("\" : ")
-        writeJ(v, sb, indent + 1)
-        sb.append(if (i < fs.size - 1) ",\n" else "\n")
-      }
-      sb.append("  " * indent).append('}')
-    case JArr(Seq()) => sb.append("[ ]")
-    case JArr(items) =>
-      sb.append("[ ")
-      items.zipWithIndex.foreach { case (v, i) =>
-        writeJ(v, sb, indent)
-        if (i < items.size - 1) sb.append(", ")
-      }
-      sb.append(" ]")
+  private def putErrors(o: ObjectNode, errors: Seq[(String, String)]): Unit = {
+    val e = o.putObject("errors")
+    errors.foreach { case (k, m) => e.put(k, m) }
   }
 
-  private def pretty(j: J): String = {
-    val sb = new StringBuilder
-    writeJ(j, sb, 0)
-    sb.toString
-  }
-
-  /** Per-doc OutputUnit JSON: valid, errors?, details? (field order per
+  /** Per-doc OutputUnit: valid, errors?, details? (field order per
     * NetworkNT OutputUnit / golden invalidyaml.json + multi3invalidyaml
     * .json).
     */
-  private def docUnit(r: VerdictRow): J = JObj(
-    Seq("valid" -> (JBool(r.valid): J)) ++
-      (if (r.errors.nonEmpty)
-        Seq("errors" -> (JObj(r.errors.map { case (k, m) =>
-          k -> (JStr(m): J) }): J))
-      else Nil) ++
-      (if (r.details.nonEmpty)
-        Seq("details" -> (JArr(r.details.map(detailUnit)): J))
-      else Nil))
+  private def docUnit(r: VerdictRow): ObjectNode = {
+    val o = jsonMapper.createObjectNode().put("valid", r.valid)
+    if (r.errors.nonEmpty) putErrors(o, r.errors)
+    if (r.details.nonEmpty) {
+      val ds = o.putArray("details")
+      r.details.foreach(d => ds.add(detailUnit(d)))
+    }
+    o
+  }
 
-  private def detailUnit(d: Detail): J = JObj(Seq(
-    "valid" -> JBool(false),
-    "evaluationPath" -> JStr(d.evaluationPath),
-    "schemaLocation" -> JStr(d.schemaLocation),
-    "instanceLocation" -> JStr(d.instanceLocation),
-    "errors" -> JObj(d.errors.map { case (k, m) => k -> (JStr(m): J) })))
+  private def detailUnit(d: Detail): ObjectNode = {
+    val o = jsonMapper.createObjectNode().put("valid", false)
+      .put("evaluationPath", d.evaluationPath)
+      .put("schemaLocation", d.schemaLocation)
+      .put("instanceLocation", d.instanceLocation)
+    putErrors(o, d.errors)
+    o
+  }
 
-  /** JSON — the reference's FilesOutput shape `{valid, files:{...}}`
-    * (golden testreport/invalidyaml.json). Run verdict comes from the
+  /** The reference's FilesOutput document `{valid, files:{...}}`, which
+    * the JSON and YAML reports both write. Run verdict comes from the
     * exact summary, not the collected slice.
     */
-  def renderJson(rows: Seq[VerdictRow], summary: RunSummary): String =
-    pretty(JObj(Seq(
-      "valid" -> JBool(summary.allValid),
-      "files" -> JObj(rows.map(r => r.doc_id -> docUnit(r))))))
-
-  /** YAML — FilesOutput.toYamlString (golden testreport/invalidyaml
-    * .yaml): `---` header, unquoted keys, double-quoted string values,
-    * Jackson YAMLMapper array-dash placement. Byte-exact vs the goldens.
-    */
-  def renderYaml(rows: Seq[VerdictRow], summary: RunSummary): String = {
-    def q(s: String): String = "\"" + jsonEscape(s) + "\""
-    val sb = new StringBuilder("---\n")
-    sb.append(s"valid: ${summary.allValid}\n")
-    sb.append("files:\n")
-    rows.foreach { r =>
-      sb.append(s"  ${r.doc_id}:\n")
-      sb.append(s"    valid: ${r.valid}\n")
-      if (r.errors.nonEmpty) {
-        sb.append("    errors:\n")
-        r.errors.foreach { case (k, m) =>
-          sb.append(s"      $k: ${q(m)}\n")
-        }
-      }
-      if (r.details.nonEmpty) {
-        sb.append("    details:\n")
-        r.details.foreach { d =>
-          sb.append("    - valid: false\n")
-          sb.append(s"      evaluationPath: ${q(d.evaluationPath)}\n")
-          sb.append(s"      schemaLocation: ${q(d.schemaLocation)}\n")
-          sb.append(s"      instanceLocation: ${q(d.instanceLocation)}\n")
-          sb.append("      errors:\n")
-          d.errors.foreach { case (k, m) =>
-            sb.append(s"        $k: ${q(m)}\n")
-          }
-        }
-      }
-    }
-    sb.toString
+  private def filesOutput(rows: Seq[VerdictRow], summary: RunSummary)
+      : ObjectNode = {
+    val root = jsonMapper.createObjectNode().put("valid", summary.allValid)
+    val files = root.putObject("files")
+    rows.foreach(r => files.set[ObjectNode](r.doc_id, docUnit(r)))
+    root
   }
+
+  /** JSON — FilesOutput through Jackson's DefaultPrettyPrinter (golden
+    * testreport/invalidyaml.json).
+    */
+  def renderJson(rows: Seq[VerdictRow], summary: RunSummary): String =
+    jsonPretty.writeValueAsString(filesOutput(rows, summary))
+
+  /** YAML — FilesOutput.toYamlString through Jackson's YAMLMapper (golden
+    * testreport/invalidyaml.yaml): `---` header, double-quoted string
+    * values, keys quoted only where YAML needs it. Byte-exact vs the
+    * goldens.
+    */
+  def renderYaml(rows: Seq[VerdictRow], summary: RunSummary): String =
+    yamlMapper.writeValueAsString(filesOutput(rows, summary))
 
   /** Failure-category message — extractFailureMessage parity
     * (FilesOutputToJunit.java:130-150): "No Schema Error" / "YAML Parse
@@ -323,21 +286,17 @@ object Reports {
     sb.toString
   }
 
-  private def sarifResult(filename: String, message: String,
-      instanceLocation: Option[String]): J = {
-    val region: J = instanceLocation match {
-      case Some(il) => JObj(Seq(
-        "snippet" -> JObj(Seq("text" -> JStr("Path: " + il)))))
-      case None => JObj(Seq.empty)
-    }
-    JObj(Seq(
-      "level" -> JStr("error"),
-      "locations" -> JArr(Seq(JObj(Seq(
-        "physicalLocation" -> JObj(Seq(
-          "artifactLocation" -> JObj(Seq("uri" -> JStr(filename))),
-          "region" -> region)))))),
-      "message" -> JObj(Seq("text" -> JStr(message))),
-      "ruleId" -> JStr("schema-validation")))
+  private def addSarifResult(results: ArrayNode, filename: String,
+      message: String, instanceLocation: Option[String]): Unit = {
+    val res = results.addObject().put("level", "error")
+    val loc = res.putArray("locations").addObject()
+      .putObject("physicalLocation")
+    loc.putObject("artifactLocation").put("uri", filename)
+    val region = loc.putObject("region")
+    instanceLocation.foreach(il =>
+      region.putObject("snippet").put("text", "Path: " + il))
+    res.putObject("message").put("text", message)
+    res.put("ruleId", "schema-validation")
   }
 
   /** SARIF 2.1.0 — FilesOutputToSarif parity (golden testreport/
@@ -348,73 +307,74 @@ object Reports {
     */
   def renderSarif(rows: Seq[VerdictRow], summary: RunSummary): String = {
     val start = java.time.Instant.now().toString
-    val results: Seq[J] = rows.filterNot(_.valid).flatMap { r =>
-      val errResults =
-        if (r.errors.isEmpty) Nil
-        else Seq(sarifResult(r.doc_id,
+    // an ObjectNode keeps insertion order, so each key is put in the
+    // golden's order; the invocation is filled once the results are built
+    val root = jsonMapper.createObjectNode()
+      .put("$schema", "https://json.schemastore.org/sarif-2.1.0.json")
+    val run = root.putArray("runs").addObject()
+    root.put("version", "2.1.0")
+    val invocation = run.putArray("invocations").addObject()
+    val results = run.putArray("results")
+    rows.filterNot(_.valid).foreach { r =>
+      if (r.errors.nonEmpty)
+        addSarifResult(results, r.doc_id,
           r.errors.collectFirst { case ("error", m) => m }
-            .getOrElse("Validation error"), None))
-      val detResults = r.details.map { d =>
+            .getOrElse("Validation error"), None)
+      r.details.foreach { d =>
         val msg = s"At path '${d.instanceLocation}': " +
           d.errors.map(_._2).mkString(" ")
-        sarifResult(r.doc_id, msg.trim, Some(d.instanceLocation))
+        addSarifResult(results, r.doc_id, msg.trim, Some(d.instanceLocation))
       }
-      errResults ++ detResults
     }
-    val rule = JObj(Seq(
-      "defaultConfiguration" -> JObj(Seq("level" -> JStr("error"))),
-      "fullDescription" -> JObj(Seq("text" -> JStr(
-        "The file does not conform to the specified JSON/YAML schema"))),
-      "help" -> JObj(Seq("text" -> JStr(
-        "Ensure that the file content matches the schema definition"))),
-      "id" -> JStr("schema-validation"),
-      "shortDescription" -> JObj(Seq(
-        "text" -> JStr("Schema validation error")))))
-    val driver = JObj(Seq(
-      "informationUri" ->
-        JStr("https://github.com/alexmond/yj-schema-validator"),
-      "name" -> JStr("YAML Schema Validator"),
-      "rules" -> JArr(Seq(rule)),
-      "semanticVersion" -> JStr("1.0.0"),
-      "version" -> JStr("1.0.0")))
-    val run = JObj(Seq(
-      "invocations" -> JArr(Seq(JObj(Seq(
-        "endTimeUtc" -> JStr(java.time.Instant.now().toString),
-        "executionSuccessful" -> JBool(summary.allValid),
-        "exitCode" -> JInt(if (summary.allValid) 0L else 1L),
-        "startTimeUtc" -> JStr(start))))),
-      "results" -> JArr(results),
-      "tool" -> JObj(Seq("driver" -> driver))))
-    pretty(JObj(Seq(
-      "$schema" -> JStr("https://json.schemastore.org/sarif-2.1.0.json"),
-      "runs" -> JArr(Seq(run)),
-      "version" -> JStr("2.1.0"))))
+    val driver = run.putObject("tool").putObject("driver")
+      .put("informationUri",
+        "https://github.com/alexmond/yj-schema-validator")
+      .put("name", "YAML Schema Validator")
+    val rule = driver.putArray("rules").addObject()
+    rule.putObject("defaultConfiguration").put("level", "error")
+    rule.putObject("fullDescription").put("text",
+      "The file does not conform to the specified JSON/YAML schema")
+    rule.putObject("help").put("text",
+      "Ensure that the file content matches the schema definition")
+    rule.put("id", "schema-validation")
+    rule.putObject("shortDescription").put("text", "Schema validation error")
+    driver.put("semanticVersion", "1.0.0").put("version", "1.0.0")
+    invocation.put("endTimeUtc", java.time.Instant.now().toString)
+      .put("executionSuccessful", summary.allValid)
+      .put("exitCode", exitCode(summary))
+      .put("startTimeUtc", start)
+    jsonPretty.writeValueAsString(root)
   }
 
   /** LLM structured (non-compact) form — FilesOutputToLlm.toJson
     * (FilesOutputToLlm.java:40-68): `{"summary":{files,valid,invalid,
-    * errors},"results":[{file,valid,errors?}]}`; counts from the exact
-    * summary.
+    * errors},"results":[{file,valid,errors?}]}`, written compactly;
+    * counts from the exact summary.
     */
   def renderLlmJson(rows: Seq[VerdictRow], summary: RunSummary): String = {
-    val results = rows.map { r =>
+    val root = jsonMapper.createObjectNode()
+    root.putObject("summary").put("files", summary.docs)
+      .put("valid", summary.validDocs).put("invalid", summary.invalidDocs)
+      .put("errors", summary.violations)
+    val results = root.putArray("results")
+    rows.foreach { r =>
+      val res = results.addObject().put("file", r.doc_id)
+        .put("valid", r.valid)
       val flat = flatViolations(r)
-      val errs =
-        if (flat.isEmpty) ""
-        else flat.map { case (ptr, kw, msg) =>
-          s"""{"pointer":"${jsonEscape(ptr)}","keyword":"${jsonEscape(kw)}",""" +
-            s""""message":"${jsonEscape(msg)}"}"""
-        }.mkString(""","errors":[""", ",", "]")
-      s"""{"file":"${jsonEscape(r.doc_id)}","valid":${r.valid}$errs}"""
-    }.mkString("[", ",", "]")
-    s"""{"summary":{"files":${summary.docs},"valid":${summary.validDocs},""" +
-      s""""invalid":${summary.invalidDocs},"errors":${summary.violations}},""" +
-      s""""results":$results}"""
+      if (flat.nonEmpty) {
+        val errs = res.putArray("errors")
+        flat.foreach { case (ptr, kw, msg) =>
+          errs.addObject().put("pointer", ptr).put("keyword", kw)
+            .put("message", msg)
+        }
+      }
+    }
+    jsonMapper.writeValueAsString(root)
   }
 
   /** LLM-compact — header + flat error triples like
     * FilesOutputToLlm.java:83-99 (`# v/n files valid, e errors`);
-    * header counts from the exact summary.
+    * header counts from the exact summary, the cut note under it.
     */
   def renderLlm(rows: Seq[VerdictRow], summary: RunSummary): String = {
     val header = s"# ${summary.validDocs}/${summary.docs} files valid, " +
@@ -424,7 +384,7 @@ object Reports {
         s"${r.doc_id} $ptr $kw: $msg"
       }
     }
-    (header +: lines).mkString("\n")
+    (header +: (cutNote(rows, summary).toSeq ++ lines)).mkString("\n")
   }
 
   /** Exit-code sink (reference K3): 0 iff all valid — from the exact

@@ -76,7 +76,11 @@ object JsonSchemaCompiler {
   private val mapper = new ObjectMapper()
   private val yamlMapper = new ObjectMapper(new YAMLFactory())
 
-  private def readSchemaDoc(p: java.nio.file.Path): JsonNode = {
+  /** A schema file, JSON or YAML (reference P5, getSchemaYamlJsonNode
+    * YamlSchemaValidator.java:224-240): JSON when it parses as JSON, else
+    * YAML.
+    */
+  def readSchemaDoc(p: java.nio.file.Path): JsonNode = {
     val text = java.nio.file.Files.readString(p)
     try mapper.readTree(text)
     catch { case _: Exception => yamlMapper.readTree(text) }
@@ -217,8 +221,7 @@ object JsonSchemaCompiler {
     * ARRAY of violation structs (usually 0-or-1; per-element and
     * per-key checks emit one per failing element or key).
     */
-  final case class Check(pointer: String, keyword: String,
-      schemaLocation: String, emit: View => Column)
+  final case class Check(emit: View => Column)
 
   /** The JSON-Schema type name of a value whose upper-case Spark type
     * name is `t`: "null" when `isNull` or for VOID (an explicit JSON null
@@ -579,7 +582,7 @@ object JsonSchemaCompiler {
 
       assertions(node, validPred(_, _, rd)).foreach { case (k, t) =>
         val at = s"$loc/${k.name}"
-        checks += Check(ptr, k.name, at, root => {
+        checks += Check(root => {
           val v = root.at(segs)
           t match {
             case OnValue(_, message) =>
@@ -598,7 +601,7 @@ object JsonSchemaCompiler {
         val (item, _) = deref(node.get("items"), rd)
         def perElement(keyword: String, at: String, fails: View => Column,
             message: View => Column): Unit =
-          checks += Check(ptr, keyword, at, root =>
+          checks += Check(root =>
             coalesce(filter(transform(root.at(segs).arr, (e, i) =>
               when(coalesce(fails(View.of(e)), lit(false)),
                 viol(concat(lit(ptr + "/"), i.cast("string")), keyword,

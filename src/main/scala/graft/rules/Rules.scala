@@ -36,10 +36,14 @@ final case class RequiredRule(field: String, whenKind: Option[String] = None)
 final case class PatternRule(field: String, regex: String) extends SpanRule
 
 /** `minimum` / `maximum` on a numeric field (sample-schema.json:1421-1437).
-  * With `min <= max` a value breaks at most one bound, as the kernel counts.
+  * `min <= max` is required, so a value breaks at most one bound, as the
+  * kernel counts.
   */
 final case class RangeRule(field: String, min: Option[Long], max: Option[Long])
-    extends SpanRule
+    extends SpanRule {
+  require(min.zip(max).forall { case (a, b) => a <= b },
+    s"RangeRule on $field: min exceeds max")
+}
 
 /** `minLength` on a string field (sample-schema.json:1964-1966). */
 final case class MinLengthRule(field: String, minLen: Int) extends SpanRule

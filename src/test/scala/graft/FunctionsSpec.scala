@@ -320,6 +320,8 @@ class FunctionsSpec extends SparkSpec {
     assert(adv.filter(col("hof") =!= col("fast")).count() === 0)
     // a RangeRule with both bounds is labelled by the bound it breaks
     val range = Seq(RangeRule("offset", Some(0), Some(7)))
+    // min > max would count 2 in the HOF form and 1 in the kernel
+    intercept[IllegalArgumentException](RangeRule("offset", Some(7), Some(0)))
     val offsets = Seq(("lo", -1), ("hi", 99)).toDF("doc_id", "o")
       .select(col("doc_id"), array(struct(lit("text").as("kind"),
         lit("x").as("text"), lit(null).cast("string").as("media_ref"),

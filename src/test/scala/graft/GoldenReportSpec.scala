@@ -2,6 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.dataformat.yaml.YAMLMapper
+
 import graft.report.Reports
 import graft.report.Reports.{Detail, VerdictRow}
 
@@ -158,6 +163,31 @@ class GoldenReportSpec extends SparkSpec {
     assert(Reports.renderLlm(errRows, errSummary) ===
       """# 2/3 files valid, 1 errors
         |multi3invalid.yaml-2 / error: No schema found in YAML file or provided as parameter""".stripMargin)
+  }
+
+  test("YAML and JSON reports keep doc keys and messages through a parse") {
+    val rows = Seq(
+      VerdictRow("#config.yaml#", valid = false,
+        errors = Seq("error" -> "line one\n\tline two")),
+      VerdictRow("a: b.yaml", valid = false, details = Seq(
+        Detail("/properties/k", "#/properties/k", "/k",
+          Seq("type" -> "integer found, boolean expected")))),
+      VerdictRow("true", valid = true))
+    val summary = Reports.RunSummary(3, 1, 2, 2)
+    def files(tree: JsonNode): Map[String, (Boolean, Seq[String])] =
+      tree.get("files").properties().asScala.map { e =>
+        e.getKey -> (e.getValue.get("valid").asBoolean(),
+          e.getValue.findValues("errors").asScala.toSeq
+            .flatMap(_.elements().asScala.map(_.asText())))
+      }.toMap
+    val expected = Map(
+      "#config.yaml#" -> (false, Seq("line one\n\tline two")),
+      "a: b.yaml" -> (false, Seq("integer found, boolean expected")),
+      "true" -> (true, Seq.empty))
+    assert(files(new YAMLMapper().readTree(
+      Reports.renderYaml(rows, summary))) === expected)
+    assert(files(new ObjectMapper().readTree(
+      Reports.renderJson(rows, summary))) === expected)
   }
 
   test("exit codes: [T,F,T] → 1, [T,T,T] → 0 (reference K3)") {

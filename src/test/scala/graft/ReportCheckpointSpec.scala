@@ -79,6 +79,14 @@ class ReportCheckpointSpec extends SparkSpec {
     val (capped, csum) = Reports.gather(verdicts, violations, maxDocs = 7)
     assert(capped.size === 7 && csum.docs === 500)
     assert(csum === gsum)
+    // the text and LLM-compact reports say that rows were cut
+    val shown =
+      capped.map(r => r.errors.size + r.details.map(_.errors.size).sum).sum
+    assert(shown < csum.violations)
+    val note = s"(showing 7 of 500 documents and $shown of " +
+      s"${csum.violations} violations)"
+    assert(Reports.renderText(capped, csum).endsWith("\n" + note + "\n"))
+    assert(Reports.renderLlm(capped, csum).split("\n")(1) === note)
   }
 
   test("checkpoint: interrupted run resumes and matches the cold run") {
